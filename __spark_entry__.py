@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply the session confs the engine needs when the driver supplies its
-    own SparkSession (nanos parquet reads, ANSI-stable behavior)."""
+    own SparkSession (nanos parquet reads, ANSI-stable behavior).
+
+    ``session.build_session`` also sizes the generated-code cache
+    (``spark.sql.codegen.cache.maxEntries``), but that conf is static: it
+    cannot be set on a running session, so a driver-supplied session keeps
+    Spark's default of 100 entries and recompiles classes that fall out of
+    it. Results are the same; only the compile time differs."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark

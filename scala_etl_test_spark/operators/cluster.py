@@ -7,7 +7,8 @@ each round every node takes the min of its own and its neighbors' labels
 (one join + one groupBy per round); converges in O(graph diameter) rounds,
 which for near-dup graphs (overwhelmingly tiny cliques, diameter ≤ 2-3) is
 a handful of shuffles. No driver adjacency, no ``collect``; the only
-driver-side value per round is the 1-row convergence check, which is also
+driver-side value per round is the changed-label count, observed on the
+round's own checkpoint job (:func:`_checkpoint_counted`), which is also
 what terminates the loop. The O(log n)-round large-star/small-star scheme
 of Kiveris et al., SoCC'14 (:func:`connected_components_alternating`) is
 the diameter-independent variant for deep chains/super-hubs — for dedup
@@ -21,12 +22,25 @@ Scale notes:
   upgrade below is the structural fix if a pair generator ever emits
   super-hub nodes.
 - Rounds are materialized via ``localCheckpoint`` to cut the exponentially
-  growing lineage (iterative-algorithm hygiene on any cluster).
+  growing lineage (iterative-algorithm hygiene on any cluster). The
+  convergence count rides on that checkpoint through ``DataFrame.observe``,
+  so a round runs no probe job of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+
+
+def _checkpoint_counted(df: DataFrame, flag: Column) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint()`` plus the number of its rows where ``flag``
+    holds, observed in the checkpoint's own job. This is the convergence
+    test of the iterative loops below: it replaces a separate probe action
+    (``limit(1).count()``, ``isEmpty()``) that re-scanned the checkpoint in
+    a job of its own every round."""
+    obs = Observation()
+    out = df.observe(obs, F.count_if(flag).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
 
 
 def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -83,8 +97,7 @@ def connected_components(
                 ).alias("_changed"),
             )
         )
-        updated = updated.localCheckpoint()  # cut lineage each round
-        changed = updated.filter(F.col("_changed")).limit(1).count()
+        updated, changed = _checkpoint_counted(updated, F.col("_changed"))
         labels = updated.drop("_changed")
         if changed == 0:
             return labels
@@ -242,9 +255,9 @@ def forget_closure_ids(
             .select(F.col("v").alias("node"))
             .distinct()
             .join(F.broadcast(visited), on="node", how="left_anti")
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
+        nxt, n_new = _checkpoint_counted(nxt, F.lit(True))
+        if n_new == 0:
             return visited.select(F.col("node").alias(id_col))
         # no checkpoint: both operands are already flat checkpointed RDD
         # scans, so the union's lineage stays round-count-deep, not

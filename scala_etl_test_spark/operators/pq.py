@@ -106,9 +106,15 @@ def _argmin_code(vq: Column, codebook_s: list[list[int]]) -> Column:
     path is guarded to never overflow), so the selected code — and every
     declared query result — is bit-identical to the always-decimal r13
     form; what changes is that the k·dsub multiply-accumulate per row runs
-    in int64 instead of decimal-128 for normal data. A NULL-component or
-    empty vq makes the guard NULL and falls through to the decimal path,
-    which reproduces the r13 NULL semantics exactly."""
+    in int64 instead of decimal-128 for normal data.
+
+    NULL routing: a NULL or empty vq, or one whose components are all NULL,
+    makes the guard NULL and falls through to the decimal path. A vq with
+    only SOME NULL components is guarded on its non-NULL ones, because
+    ``array_max`` skips NULL elements, so a small one takes the int64 path.
+    The code is still the r13 one: a NULL component makes every candidate
+    distance NULL in both folds alike, so both paths select the same
+    code."""
     cands = F.array(
         *[
             F.struct(

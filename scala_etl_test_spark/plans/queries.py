@@ -4377,24 +4377,14 @@ _BASE_ORACLE_SQL: dict[str, str] = {
 }
 
 # Driver-gate ordering: the driver's correctness gate covers roughly the
-# first ~50 registry entries in insertion order per round.  Round-13
-# priority (per VERDICT r12 item 1): (1) the ENTIRE r9-stale tier — all
-# 38 queries whose last green driver row is r9, in registry order.
-# This tier is simultaneously the oldest AND contains most of the
-# queries whose implementation changed in r12 (the NULL-text shingle
-# builder in operators/dedup.py:60-80 and the try_divide ratio fixes in
-# operators/text.py:64): dedup_minhash_pairs, dedup_prefix_jaccard,
-# dedup_snm, chunk_dedup, split_leakage_audit, source_overlap_matrix,
-# lsh_recall_audit, quality_filter_sweep, oov_rate, ...  (2) the
-# r10-gated entries ALSO downstream of the r12 shingle/text fixes
-# (dedup_simhash*, dedup_containment, dedup_ngram_jaccard,
-# dedup_edit_distance, dedup_method_report, window_moving_avg,
-# json_props_extract) plus the span/winnow family that shares the
-# shingle builder — fills the ~50 budget.  Everything green in r11/r12
-# on unchanged code sorts last.  Done-bar: after the r13 gate no green
-# row is older than r11 and every query whose implementation changed in
-# r12 has a post-change driver row.  Staleness computed from
-# CORRECTNESS_r*.json (latest round with a green row per query name).
+# first ~50 registry entries in insertion order per round, so this list
+# puts first the queries that most need a fresh driver row: (1) every
+# query whose implementation changed in the latest round (r14), then
+# (2) the stalest remaining tier, staleness being the latest round with a
+# green row per query name in CORRECTNESS_r*.json. Done-bar for the r14
+# head: every r14-changed query has a post-change driver row, and no green
+# row is older than two rounds. The tier comments below name the changes
+# and the staleness each tier covers.
 _GATE_PRIORITY: list[str] = [
     # (1) code changed THIS round (r14) — every optimization site needs a
     # fresh driver correctness row on the optimized code: the

@@ -4,6 +4,18 @@ Reference: ``StartETL.scala:30`` builds ``local[*]`` with a fixed appName.
 Here the builder also turns on the Spark-3 features the reference could not
 use (AQE, skew-join handling) — these are the scale levers that let the same
 logical plans survive a 100 TB cluster run (SURVEY.md §4.2).
+
+It also sizes Spark's generated-code cache (``CODEGEN_CACHE_ENTRIES``).
+Spark's default holds 100 compiled classes, far below what this engine
+reuses. Distinct classes measured at sf0.001 on 4 cores: one ``perfbench``
+corpus pass uses 281 (268 since the connected-components and closure-BFS
+rounds stopped running probe queries), one incremental pass 59, and the
+whole 184-query registry ~2,600 (2,794 compiles on a cold registry pass,
+179 on a warm one). At the default size every warm corpus pass recompiled
+350-435 classes with Janino (a warm registry pass 4,468), and the
+recompiles kept the C2 JIT busy as well; sized, a warm corpus pass compiles
+4. An unbounded cache costs ~24 MB of metaspace for the whole registry; the
+bound below holds the registry, the tests and the benchmark.
 """
 
 from __future__ import annotations
@@ -13,6 +25,10 @@ import os
 from pyspark.sql import SparkSession
 
 APP_NAME = "scala-etl-test-spark"
+
+# spark.sql.codegen.cache.maxEntries: a static conf, read once when the JVM
+# first generates code, so it only applies when this builder starts Spark
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def build_session(
@@ -26,6 +42,8 @@ def build_session(
     - AQE on: runtime shuffle coalescing + skew-join splitting replaces the
       reference's fixed ``spark.sql.shuffle.partitions=200``.
     - Arrow on: any pandas-UDF extension point transfers via Arrow batches.
+    - Codegen cache sized to ``CODEGEN_CACHE_ENTRIES`` (module docstring):
+      every generated class is compiled once per JVM, not once per pass.
     - Local mode sizes shuffle partitions to the local core count; on a real
       cluster leave ``shuffle_partitions=None`` and let AQE coalesce from a
       high initial value.
@@ -38,6 +56,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # read TIMESTAMP(NANOS) parquet (events.ts) as long nanos; converted
         # to micro-precision timestamps in sources.parquet_source.read_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -10,6 +10,7 @@ from scala_etl_test_spark.operators.cluster import (
     connected_components,
     connected_components_alternating,
     dedup_keep_representative,
+    forget_closure_ids,
 )
 
 
@@ -48,6 +49,14 @@ def test_nonconvergence_raises(spark):
     edges = [(i, i + 1) for i in range(10)]
     with pytest.raises(ValueError, match="did not converge"):
         connected_components(_pairs(spark, edges), max_rounds=2)
+
+
+def test_closure_bfs_nonconvergence_raises(spark):
+    """A chain longer than the BFS round bound (20) from its end seed."""
+    edges = [(i, i + 1) for i in range(25)]
+    optout = spark.createDataFrame([(0,)], "doc_id long")
+    with pytest.raises(ValueError, match="did not converge"):
+        forget_closure_ids(optout, _pairs(spark, edges))
 
 
 def test_alternating_matches_propagation(spark):

@@ -46,9 +46,10 @@ PLANBUILD_JOB_ALLOWLIST: dict[str, str] = {
     "model) + 1-row query-vector fetch",
     "hybrid_retrieval": "1-row query-vector fetch",
     # --- loop-carried algorithms: per-round materialization IS the
-    # algorithm (convergence probes / merge selection), bounded by the
+    # algorithm (convergence counts / merge selection), bounded by the
     # documented round counts ---
-    "dedup_clusters": "alternating-star rounds, limit(1) convergence probes",
+    "dedup_clusters": "min-label propagation rounds; each round's "
+    "convergence count is observed on that round's localCheckpoint job",
     "label_spread": "per-round localCheckpoint of the label frontier",
     "bpe_merges": "one best-pair selection job per learned merge",
     "bpe_encode": "BPE training loop feeds the encoder",

@@ -6,7 +6,10 @@ Warms the query once at sf0.001 (JIT/codegen), then times one run at
 ``sf_dir`` (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1) with the
 noop sink, and prints every stage of that run sorted by duration with task
 counts and shuffle read/write bytes — the guide-§1 empirical loop without a
-browser.
+browser. The header line also carries the run's Janino compile count and
+compile milliseconds (the CodegenMetrics / CodeGenerator.compileTime delta):
+a warm run should compile nothing, so a nonzero count flags generated code
+that misses the session's codegen cache.
 """
 
 from __future__ import annotations
@@ -54,8 +57,12 @@ def main() -> int:
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}") as r:
             return json.load(r)
 
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     jobs_before = {j["jobId"] for j in rest("jobs")}
+    n0, ns0 = compiles.getCount(), codegen.compileTime()
     wall = run_once(sf_dir)
+    n_compiles, compile_ms = compiles.getCount() - n0, (codegen.compileTime() - ns0) / 1e6
     jobs = [j for j in rest("jobs") if j["jobId"] not in jobs_before]
     stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
     stages = []
@@ -81,6 +88,7 @@ def main() -> int:
     stages.sort(key=dur, reverse=True)
     total = sum(dur(s) for s in stages)
     print(f"\n{name} @ {sf_dir}: wall={wall:.3f}s  jobs={len(jobs)}  "
+          f"compiles={n_compiles}  compile_ms={compile_ms:.0f}  "
           f"stages={len(stages)}  sum(stage_wall)={total:.2f}s")
     print(f"{'dur_s':>7} {'tasks':>5} {'in_MB':>8} {'shR_MB':>8} {'shW_MB':>8} "
           f"{'exRun_s':>8} {'gc_s':>6}  name")
