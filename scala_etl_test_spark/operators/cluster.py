@@ -35,9 +35,8 @@ from pyspark.sql import Column, DataFrame, Observation, functions as F
 def _checkpoint_counted(df: DataFrame, flag: Column) -> tuple[DataFrame, int]:
     """``df.localCheckpoint()`` plus the number of its rows where ``flag``
     holds, observed in the checkpoint's own job. This is the convergence
-    test of the iterative loops below: it replaces a separate probe action
-    (``limit(1).count()``, ``isEmpty()``) that re-scanned the checkpoint in
-    a job of its own every round."""
+    test of the iterative loops below; reading it off the checkpoint saves
+    each round a probe action and the job(s) it would run."""
     obs = Observation()
     out = df.observe(obs, F.count_if(flag).alias("n")).localCheckpoint()
     return out, obs.get["n"]

@@ -112,9 +112,8 @@ def _argmin_code(vq: Column, codebook_s: list[list[int]]) -> Column:
     makes the guard NULL and falls through to the decimal path. A vq with
     only SOME NULL components is guarded on its non-NULL ones, because
     ``array_max`` skips NULL elements, so a small one takes the int64 path.
-    The code is still the r13 one: a NULL component makes every candidate
-    distance NULL in both folds alike, so both paths select the same
-    code."""
+    Either path selects the same code: a NULL component makes every
+    candidate distance NULL in both folds alike."""
     cands = F.array(
         *[
             F.struct(

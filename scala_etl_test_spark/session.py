@@ -13,8 +13,8 @@ rounds stopped running probe queries), one incremental pass 59, and the
 whole 184-query registry ~2,600 (2,794 compiles on a cold registry pass,
 179 on a warm one). At the default size every warm corpus pass recompiled
 350-435 classes with Janino (a warm registry pass 4,468), and the
-recompiles kept the C2 JIT busy as well; sized, a warm corpus pass compiles
-4. An unbounded cache costs ~24 MB of metaspace for the whole registry; the
+recompiles kept the C2 JIT busy as well; with the cache sized, a warm
+corpus pass compiles 4. An unbounded cache costs ~24 MB of metaspace for the whole registry; the
 bound below holds the registry, the tests and the benchmark.
 """
 
