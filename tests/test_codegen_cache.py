@@ -35,14 +35,22 @@ def test_session_sizes_codegen_cache(spark):
 
 @pytest.mark.parametrize("name", ["dedup_clusters", "forget_documents"])
 def test_second_build_compiles_nothing(spark, sf_dir, name):
+    """A too-small cache, or a class named afresh on every call, recompiles
+    on every rerun. AQE may also replan a rerun differently, depending on
+    which query stage finishes first, and a new plan variant compiles its
+    few new classes once; so up to three reruns get the chance to reach 0."""
+
     def build_and_run():
         QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         release_persisted()
 
     build_and_run()
-    before = _compiles(spark)
-    build_and_run()
-    assert _compiles(spark) - before == 0
+    reruns = []
+    while not reruns or (reruns[-1] and len(reruns) < 3):
+        before = _compiles(spark)
+        build_and_run()
+        reruns.append(_compiles(spark) - before)
+    assert reruns[-1] == 0, reruns
 
 
 def _loop_jobs(spark, monkeypatch, run) -> tuple[int, int, int]:
