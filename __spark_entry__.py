@@ -25,7 +25,15 @@ def _configure(spark: SparkSession) -> SparkSession:
     (``spark.sql.codegen.cache.maxEntries``), but that conf is static: it
     cannot be set on a running session, so a driver-supplied session keeps
     Spark's default of 100 entries and recompiles classes that fall out of
-    it. Results are the same; only the compile time differs."""
+    it. Results are the same; only the compile time differs.
+
+    ``build_session`` also turns off PySpark's Python call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark reads
+    that flag once per Python process
+    (``pyspark.errors.utils._enable_debugging_cache``), so setting it here
+    would have no effect once the driver has built a DataFrame; this
+    function leaves it alone and a driver-supplied session keeps the
+    driver's own setting. Again only plan-build time differs."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark

@@ -1193,6 +1193,21 @@ class TestStreamAppendIvf:
         got = read_ivf_corpus(spark, d).groupBy("vec_id").count().filter(F.col("count") > 1).count()
         assert got == 0, "replay duplicated rows"
 
+    def test_writes_one_file_per_cell(self, spark, index):
+        """init and appends route rows by cell before the write, so each
+        ``cluster_id=K/batch_id=N`` dir holds one file, not one per task."""
+        from scala_etl_test_spark.streaming import append_batch_to_ivf
+        from scala_etl_test_spark.streaming.ann import _corpus_dir
+
+        d, emb = index
+        max_id = emb.agg(F.max("vec_id")).first()[0] + 1
+        for b in (1, 2):
+            assert append_batch_to_ivf(spark, d, self._shifted(emb, b, max_id), b)
+        cells = sorted(pathlib.Path(_corpus_dir(d)).glob("cluster_id=*/batch_id=*"))
+        assert {c.name for c in cells} == {"batch_id=-1", "batch_id=1", "batch_id=2"}
+        files = {str(c): len(list(c.glob("*.parquet"))) for c in cells}
+        assert all(n == 1 for n in files.values()), files
+
     def test_stream_end_to_end_and_erasure_replay_safety(self, spark, index, tmp_path):
         import os, time as _t
 
