@@ -26,12 +26,13 @@ call (``getActiveSession``, a JVM class lookup, ``spark.conf.get``,
 ``PySparkCurrentOrigin.set`` and ``.clear``). The flag only decides
 whether expressions carry that Python origin; logical and physical plans,
 job and stage names, and results are unchanged. Measured at sf0.001 on
-4 cores: building ``q_dedup_minhash_pairs`` sends 982 Py4J commands
-instead of 2,722 and makes 77 K Python function calls instead of 244 K;
-in a traced ``perfbench`` corpus pass the time before each operation's
-first job falls from 3.72 s to 2.52 s and ``plans.build_s`` from 7.20 s
-to 5.61 s, with the same 161 jobs. To get Python line numbers back in
-error messages, pass
+4 cores: a warm build of ``q_dedup_minhash_pairs`` sends 982 Py4J
+commands instead of 2,722, makes 77 K Python function calls instead of
+244 K and takes 0.31 s instead of 0.50 s. Over the eight ``perfbench``
+corpus operations (sf0.002, one JVM, capture toggled between warm
+passes, medians of 8) the DataFrame builds of a pass take 5.31 s instead
+of 7.15 s and the pass 8.29 s instead of 10.03 s, with the same jobs.
+To get Python line numbers back in error messages, pass
 ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
 PySpark reads the flag once per Python process, on the first wrapped call
 (and treats it as off when no session is active then), so it must be set
