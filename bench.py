@@ -131,9 +131,8 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from scala_etl_test_spark.caching import release_persisted
-    from scala_etl_test_spark.plans.queries import QUERIES
+    from scala_etl_test_spark.plans.queries import PLANBUILD_JOB_ALLOWLIST, QUERIES
     from scala_etl_test_spark.session import build_session
-    from tests.test_planbuild_jobs import PLANBUILD_JOB_ALLOWLIST
 
     spark = build_session(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

@@ -4468,3 +4468,53 @@ ORACLE_SQL: dict[str, str] = {
 
 assert set(QUERIES) == set(_BASE_QUERIES)
 assert set(ORACLE_SQL) == set(_BASE_ORACLE_SQL)
+
+# Queries whose DataFrame build runs Spark jobs by design, name -> why the
+# jobs are inherent to the query's semantics. Every other query builds
+# without a job (tests/test_planbuild_jobs.py); bench.py marks these
+# queries' plan_build_s as including those jobs.
+PLANBUILD_JOB_ALLOWLIST: dict[str, str] = {
+    # --- literal-parameter probes: the query vector is fetched with a
+    # 1-row limit job because the plan takes it as a literal (at scale the
+    # caller supplies it; the probe is the self-contained-query form) ---
+    "ann_cosine_topk": "1-row query-vector fetch",
+    "ann_lsh_topk": "query-vector fetch + 1-row signature eval",
+    "ann_multiprobe_topk": "query-vector fetch + 1-row signature eval",
+    "ann_ivf_topk": "1-row query-vector fetch",
+    "pq_codes": "1-row query-vector fetch",
+    "ann_pq_topk": "1-row query-vector fetch",
+    "ann_ivfpq_topk": "1-row query-vector fetch",
+    "ann_ivfpq_residual_topk": "1-row query-vector fetch",
+    "ann_recall_report": "query-vector fetch across every ANN member",
+    "pq_rotation_recall": "per-dim variance collect (d-row permutation "
+    "model) + ONE seed fetch serving the query vector and both codebooks",
+    "ann_truncation_recall": "per-dim variance collect (d-row ranking "
+    "model) + 1-row query-vector fetch",
+    "hybrid_retrieval": "1-row query-vector fetch",
+    # --- loop-carried algorithms: per-round materialization IS the
+    # algorithm (convergence counts / merge selection), bounded by the
+    # documented round counts ---
+    "dedup_clusters": "min-label propagation rounds; each round's "
+    "convergence count is observed on that round's localCheckpoint job",
+    "label_spread": "per-round localCheckpoint of the label frontier",
+    "bpe_merges": "one best-pair selection job per learned merge",
+    "bpe_encode": "BPE training loop feeds the encoder",
+    "kmeans_train": "Lloyd iterations via pyspark.ml",
+    "graph_triangles": "two bounded count()s materialize the edge/"
+    "oriented caches before their consumers fan out — concurrent query "
+    "stages would each recompute the cold cache (profiled: the pair "
+    "build ran twice, ~20 s exRun per copy at sf0.1)",
+    # --- composites that consume the above eagerly inside cache scopes ---
+    "dedup_method_report": "runs every dedup strategy incl. cluster rounds",
+    "corpus_clean": "includes connected-components cluster rounds",
+    "corpus_prepare": "includes connected-components cluster rounds",
+    "forget_documents": "includes seed-frontier BFS closure rounds",
+    "forget_from_ivf": "includes seed-frontier BFS closure rounds",
+    "erasure_audit": "the persisted erasure request (closure rounds + "
+    "cell-local partition rewrite) must RUN before its audit artifact "
+    "can be classified; the returned frame is the lazy audit join",
+    "split_leakage_audit": "includes connected-components cluster rounds",
+    # --- driver-bounded sketch point queries ---
+    "heavy_hitters_cms": "CMS point queries need the JVM sketch object; "
+    "bounded at top_n + 1 small jobs",
+}

@@ -41,12 +41,8 @@ when the session is built.
 
 from __future__ import annotations
 
-import contextlib
 import os
-from collections.abc import Iterator
-from types import SimpleNamespace
 
-from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 from pyspark.sql import SparkSession
 
 APP_NAME = "scala-etl-test-spark"
@@ -108,30 +104,6 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-@contextlib.contextmanager
-def count_py4j_commands(spark: SparkSession) -> Iterator[SimpleNamespace]:
-    """Count, as ``.n`` of the yielded object, the Py4J commands
-    (Python→JVM round trips) this process sends inside the block, by
-    wrapping the gateway client's ``send_command``. Object-release commands
-    are not counted: Python's garbage collector sends them for proxies of
-    earlier work whenever it happens to run."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    count = SimpleNamespace(n=0)
-    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
-
-    def counted(command, *args, **kwargs):
-        if not command.startswith(release):
-            count.n += 1
-        return send(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        yield count
-    finally:
-        client.send_command = send
 
 
 def apply_azure_sas(spark: SparkSession, props: dict[str, str]) -> str | None:

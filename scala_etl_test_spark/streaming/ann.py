@@ -105,8 +105,8 @@ def init_ivf_index(
 ) -> None:
     """Materialize the IVF index at ``index_dir``: frozen centroids
     (stride-seeded here; any (centroid_id, centroid_vec) frame drops in)
-    and the seed corpus routed and partitioned by cell (one file per cell)
-    with the ``batch_id=-1`` delta spine the appends will extend."""
+    and the seed corpus partitioned by cell with the ``batch_id=-1`` delta
+    spine the appends will extend, written through :func:`_route_by_cell`."""
     from scala_etl_test_spark.operators.similarity import ivf_assign, stride_centroids
 
     cents = stride_centroids(seed, n_centroids, vec_col=vec_col, id_col=id_col)
@@ -114,11 +114,24 @@ def init_ivf_index(
     (
         ivf_assign(seed, read_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col)
         .withColumn("batch_id", F.lit(-1))
-        .repartition("cluster_id")
+        .transform(_route_by_cell)
         .write.partitionBy("cluster_id", "batch_id")
         .parquet(_corpus_dir(index_dir))
     )
     _marker(index_dir, -1).mkdir(parents=True, exist_ok=True)
+
+
+def _route_by_cell(assigned: DataFrame) -> DataFrame:
+    """Route assigned rows by cell before a ``partitionBy(cluster_id, ...)``
+    write. Straight from the spread assignment, every task writes one file
+    per cell it holds (up to tasks × cells files per write). A plain
+    ``repartition("cluster_id")`` would give one file per cell but put a
+    whole cell in one task, however large the caller's cells are (K=1 is one
+    write task for the whole corpus). The rebalance hint hashes by cell too,
+    and AQE then coalesces small cells and splits any cell past
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` across tasks: one
+    file per cell at small cells, advisory-sized files at large ones."""
+    return assigned.hint("rebalance", "cluster_id")
 
 
 def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -167,14 +180,9 @@ def append_batch_to_ivf(
     assigned = ivf_assign(
         batch, read_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col
     )
-    # route rows by cell before the write: straight from the spread
-    # assignment every task writes one file per cell it holds (up to
-    # cores × cells files per batch); routed, each cell is one file. A cell
-    # is O(√n) rows by IVF design and the slice is one batch, so the
-    # routed partitions stay bounded
     (
         assigned.withColumn("batch_id", F.lit(batch_id))
-        .repartition("cluster_id")
+        .transform(_route_by_cell)
         .write.mode("append")
         .partitionBy("cluster_id", "batch_id")
         .parquet(str(corpus))

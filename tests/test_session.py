@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.errors.utils
 
 from scala_etl_test_spark.plans.queries import QUERIES
-from scala_etl_test_spark.session import count_py4j_commands
+from tools.py4j_count import count_py4j_commands
 
 DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 

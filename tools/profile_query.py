@@ -37,7 +37,8 @@ def main() -> int:
 
     from scala_etl_test_spark.caching import release_persisted
     from scala_etl_test_spark.plans.queries import QUERIES
-    from scala_etl_test_spark.session import build_session, count_py4j_commands
+    from scala_etl_test_spark.session import build_session
+    from tools.py4j_count import count_py4j_commands
 
     spark = build_session(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
