@@ -29,9 +29,14 @@ job and stage names, and results are unchanged. Measured at sf0.001 on
 4 cores: a warm build of ``q_dedup_minhash_pairs`` sends 982 Py4J
 commands instead of 2,722, makes 77 K Python function calls instead of
 244 K and takes 0.31 s instead of 0.50 s. Over the eight ``perfbench``
-corpus operations (sf0.002, one JVM, capture toggled between warm
-passes, medians of 8) the DataFrame builds of a pass take 5.31 s instead
-of 7.15 s and the pass 8.29 s instead of 10.03 s, with the same jobs.
+corpus operations (sf0.002, one warm JVM, capture toggled between passes,
+medians of 8) the DataFrame builds of a pass take 5.31 s instead of
+7.15 s, with the same jobs. Those are plan-build layer measurements. End
+to end, the benchmark's corpus ``wall_s`` (one measured pass of a fresh
+JVM that is still JIT-compiling) shows no resolved gain: over 30
+alternating pairs on the same machine its median went from 12.43 s to
+11.34 s, but 7 pairs went the other way and the quartile spread of the
+runs without the flag (2.31 s) is wider than that gap.
 To get Python line numbers back in error messages, pass
 ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
 PySpark reads the flag once per Python process, on the first wrapped call
