@@ -404,7 +404,11 @@ def main() -> None:
                 # For PLANBUILD_JOB_ALLOWLIST queries (CC and BFS rounds,
                 # checkpoints, query-vector fetches) the build runs real
                 # Spark jobs, so the field over-reads: it is marked, not
-                # dropped.
+                # dropped. Their localCheckpoint RDDs outlive
+                # release_persisted() and clearCache(), so the RDDs the
+                # build persisted are unpersisted here by id.
+                jsc = spark.sparkContext._jsc
+                persisted_before = set(jsc.getPersistentRDDs().keys())
                 t0 = time.perf_counter()
                 QUERIES[n](spark, small_dir)
                 solo_top[n]["plan_build_s"] = round(time.perf_counter() - t0, 3)
@@ -412,6 +416,9 @@ def main() -> None:
                     solo_top[n]["plan_build_runs_jobs"] = True
                 release_persisted()
                 spark.catalog.clearCache()
+                for rdd_id, rdd in jsc.getPersistentRDDs().items():
+                    if rdd_id not in persisted_before:
+                        rdd.unpersist(False)
                 if have_tiny:
                     tiny = min(run_once(n, tiny_dir) for _ in range(3))
                     solo_top[n]["tiny"] = round(tiny, 3)

@@ -9,18 +9,19 @@ which for near-dup graphs (overwhelmingly tiny cliques, diameter ≤ 2-3) is
 a handful of shuffles. No driver adjacency, no ``collect``; the only
 driver-side value per round is the changed-label count, observed on the
 round's own checkpoint job (:func:`_checkpoint_counted`), which is also
-what terminates the loop. The O(log n)-round large-star/small-star scheme
-of Kiveris et al., SoCC'14 (:func:`connected_components_alternating`) is
-the diameter-independent variant for deep chains/super-hubs — for dedup
-cliques the simpler propagation does strictly fewer shuffles per round.
+what terminates the loop. A chain deeper than ``max_rounds`` raises
+``ValueError`` rather than returning a truncated labelling.
+
+Loops that only ever ADD ids to a set — the erasure closures here and in
+``streaming/dedup.forget_from_index``, and ``labelspread.label_spread`` —
+share :func:`_grow_to_fixpoint`: each round computes just the new rows,
+and a round that adds none ends the loop.
 
 Scale notes:
 - State per round is the (node, label) edge list — linear in |V|+|E|. A
   celebrity node's per-round groupBy input is its full degree (the
   adjacency is static); partial aggregation (min combines map-side) and
-  AQE skew splits keep that bounded — and the large-star/small-star
-  upgrade below is the structural fix if a pair generator ever emits
-  super-hub nodes.
+  AQE skew splits keep that bounded.
 - Rounds are materialized via ``localCheckpoint`` to cut the exponentially
   growing lineage (iterative-algorithm hygiene on any cluster). The
   convergence count rides on that checkpoint through ``DataFrame.observe``,
@@ -28,6 +29,8 @@ Scale notes:
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
@@ -40,6 +43,36 @@ def _checkpoint_counted(df: DataFrame, flag: Column) -> tuple[DataFrame, int]:
     obs = Observation()
     out = df.observe(obs, F.count_if(flag).alias("n")).localCheckpoint()
     return out, obs.get["n"]
+
+
+def _grow_to_fixpoint(
+    step: Callable[[DataFrame, DataFrame, int], DataFrame],
+    seeds: DataFrame,
+    max_rounds: int,
+) -> tuple[DataFrame, int, int, bool]:
+    """Grow the set ``seeds`` round by round until a round adds nothing.
+
+    ``step(frontier, visited, round)`` returns the rows round ``round``
+    (1-based) adds; it must exclude ``visited`` itself. ``frontier`` is
+    the previous round's new rows (``seeds`` in round 1). Each round's
+    rows are checkpointed with their count observed on that job, and
+    ``visited`` grows by a plain union of checkpoint scans, so lineage
+    deepens by one scan per round and no round runs a probe job.
+    ``seeds`` should already be materialized.
+
+    Returns ``(visited, added, rounds, converged)``: ``added`` counts the
+    rows beyond ``seeds``, ``rounds`` includes the round that added none,
+    and ``converged=False`` means ``max_rounds`` ran out first."""
+    visited = frontier = seeds
+    added = 0
+    for r in range(1, max_rounds + 1):
+        new, n_new = _checkpoint_counted(step(frontier, visited, r), F.lit(True))
+        if n_new == 0:
+            return visited, added, r, True
+        visited = visited.unionByName(new)
+        frontier = new
+        added += n_new
+    return visited, added, max_rounds, False
 
 
 def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -101,82 +134,6 @@ def connected_components(
         if changed == 0:
             return labels
     raise ValueError(f"connected_components did not converge in {max_rounds} rounds")
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al., SoCC'14): every node connects its
-    strictly-larger neighbors to the minimum of its neighborhood (incl.
-    itself). Cuts long chains toward the component minimum in O(log n)
-    alternations instead of the O(diameter) rounds of plain propagation."""
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    return (
-        sym.join(mins, on="u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: orient edges large→small; every node repoints its
-    smaller neighbors (and itself) at the minimum of that set."""
-    oriented = (
-        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))  # all v < u ⇒ min incl. self
-    joined = oriented.join(mins, on="u")
-    return (
-        joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_alternating(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_rounds: int = 30
-) -> DataFrame:
-    """(node, component) via alternating large-star/small-star (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    documented upgrade path of :func:`connected_components` for graphs whose
-    diameter outgrows plain min-label propagation (deep chains, super-hubs).
-
-    Converges in O(log n) alternations independent of diameter: each
-    alternation at least halves the distance of every node to its component
-    minimum. Same output contract as :func:`connected_components`
-    (equivalence is test-pinned); per alternation it shuffles twice
-    (one groupBy per star phase) vs propagation's once, so for shallow
-    near-dup cliques the simpler propagation remains the default.
-    """
-    edges = _canonical_edges(pairs, src, dst).localCheckpoint()
-    for _ in range(max_rounds):
-        after = _small_star(_large_star(edges)).localCheckpoint()
-        # fixpoint of the composition ⇔ converged star forest (1-row
-        # actions, not data collects; the second check only runs when the
-        # first passes — one saved full-shuffle job per non-converged round)
-        changed = after.exceptAll(edges).limit(1).count() > 0 or (
-            edges.exceptAll(after).limit(1).count() > 0
-        )
-        edges = after
-        if not changed:
-            roots = (
-                edges.select(F.col("v").alias("node"))
-                .distinct()
-                .withColumn("component", F.col("node"))
-            )
-            return (
-                edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
-                .union(roots)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-    raise ValueError(
-        f"connected_components_alternating did not converge in {max_rounds} rounds"
-    )
 
 
 def dedup_keep_representative(
@@ -244,25 +201,22 @@ def forget_closure_ids(
     # connected_components
     edges = _canonical_edges(pairs, src, dst).localCheckpoint()
     adj = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    visited = opt_ids.localCheckpoint()
-    frontier = visited
-    # near-dup clusters are tiny cliques; 20 rounds is the same
-    # pathological-chain bound connected_components enforces
-    for _ in range(20):
-        nxt = (
+
+    def bfs_round(frontier: DataFrame, visited: DataFrame, _round: int) -> DataFrame:
+        return (
             adj.join(F.broadcast(frontier), adj.u == frontier.node, "left_semi")
             .select(F.col("v").alias("node"))
             .distinct()
             .join(F.broadcast(visited), on="node", how="left_anti")
         )
-        nxt, n_new = _checkpoint_counted(nxt, F.lit(True))
-        if n_new == 0:
-            return visited.select(F.col("node").alias(id_col))
-        # no checkpoint: both operands are already flat checkpointed RDD
-        # scans, so the union's lineage stays round-count-deep, not
-        # exponential — and this saves one job per round
-        visited = visited.unionByName(nxt)
-        frontier = nxt
+
+    # near-dup clusters are tiny cliques; 20 rounds is the same
+    # pathological-chain bound connected_components enforces
+    visited, _, _, converged = _grow_to_fixpoint(
+        bfs_round, opt_ids.localCheckpoint(), 20
+    )
+    if converged:
+        return visited.select(F.col("node").alias(id_col))
     raise ValueError("forget_closure_ids did not converge in 20 BFS rounds")
 
 

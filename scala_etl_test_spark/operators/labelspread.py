@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from scala_etl_test_spark.functions.vectors import cosine_from_norms, l2_norm
+from scala_etl_test_spark.operators.cluster import _grow_to_fixpoint
 
 
 def knn_edges_in_cells(
@@ -76,10 +77,12 @@ def label_spread(
     node_col: str = "node",
     label_col: str = "label",
 ) -> DataFrame:
-    """Spread ``seeds`` (node, label) along ``edges`` (src, dst, …) for a
-    fixed number of rounds: an unlabeled node adopts the majority label of
+    """Spread ``seeds`` (node, label) along ``edges`` (src, dst, …) for at
+    most ``rounds`` rounds: an unlabeled node adopts the majority label of
     its labeled out-neighbors (ties → count desc, label asc); newly
-    labeled nodes vote in later rounds. Seeds never change.
+    labeled nodes vote in later rounds. Seeds never change. A round that
+    labels nothing ends the spreading early — the unchanged label set
+    would vote the same way again.
 
     Returns (node, label, assigned_round) — 0 for seeds."""
     # materialize the graph ONCE: every round joins it, and without the
@@ -87,18 +90,15 @@ def label_spread(
     # ranking window) would re-execute per round — same discipline as the
     # CC edge list and the PageRank adjacency
     edges = edges.select("src", "dst").localCheckpoint()
-    labels = seeds.select(
+    seeded = seeds.select(
         F.col(node_col).alias("node"),
         F.col(label_col).alias("label"),
         F.lit(0).alias("assigned_round"),
     ).localCheckpoint()
-    for r in range(1, rounds + 1):
+
+    def vote(_frontier: DataFrame, labels: DataFrame, r: int) -> DataFrame:
         nbr = (
-            edges.select(F.col("src"), F.col("dst"))
-            .join(
-                labels.select(F.col("node").alias("dst"), "label"),
-                on="dst",
-            )
+            edges.join(labels.select(F.col("node").alias("dst"), "label"), on="dst")
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("votes"))
         )
@@ -110,8 +110,9 @@ def label_spread(
             .filter(F.col("_rn") == 1)
             .select(F.col("src").alias("node"), "label")
         )
-        newly = winners.join(
+        return winners.join(
             labels.select("node"), on="node", how="left_anti"
         ).withColumn("assigned_round", F.lit(r))
-        labels = labels.unionByName(newly).localCheckpoint()
+
+    labels, _, _, _ = _grow_to_fixpoint(vote, seeded, rounds)
     return labels

@@ -4496,7 +4496,8 @@ PLANBUILD_JOB_ALLOWLIST: dict[str, str] = {
     # documented round counts ---
     "dedup_clusters": "min-label propagation rounds; each round's "
     "convergence count is observed on that round's localCheckpoint job",
-    "label_spread": "per-round localCheckpoint of the label frontier",
+    "label_spread": "vote rounds until one labels nothing; each round's "
+    "new-label count is observed on that round's localCheckpoint job",
     "bpe_merges": "one best-pair selection job per learned merge",
     "bpe_encode": "BPE training loop feeds the encoder",
     "kmeans_train": "Lloyd iterations via pyspark.ml",

@@ -3551,10 +3551,10 @@ def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cent = _scaled_centroids(emb, _n_rows(sf_dir, "embeddings"))
-    # spread + cached: the kNN self-join consumes the assignment on BOTH
+    # spread + persisted: the kNN self-join consumes the assignment on BOTH
     # sides and its pairwise fanout needs cluster-wide parallelism
     # (operators/similarity.py:spread_by_cell)
-    assigned = S.spread_by_cell(S.ivf_assign(emb, cent)).cache()
+    assigned = S.spread_by_cell(S.ivf_assign(emb, cent)).transform(tracked_persist)
     edges = knn_edges_in_cells(assigned, k=5)
     seeds = emb.filter(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("node"), "label"

@@ -7,9 +7,8 @@ design* (the reference's own notebook comment: it "works because the data …
 is small enough" — a ~1.9 MB payload for 49,688 rows).
 
 Rebuild keeps the small-dim fast path (driver fetch →
-``spark.createDataFrame``) and adds the distributed path for large payloads:
-``spark.read.json`` over a path/glob, which scales to any size (SURVEY §7.3
-item 4). ``file://`` URLs are accepted so tests need no network.
+``spark.createDataFrame``). ``file://`` URLs are accepted so tests need no
+network.
 """
 
 from __future__ import annotations
@@ -60,9 +59,3 @@ def read_product_details_api(spark: SparkSession, url: str) -> DataFrame:
         for item in fetch_product_details(url)
     ]
     return spark.createDataFrame(rows, PRODUCT_DETAIL_SCHEMA)
-
-
-def read_product_details_distributed(spark: SparkSession, path: str) -> DataFrame:
-    """Large-payload path: distributed JSON-lines read with the declared
-    schema — use when the dimension no longer fits driver memory."""
-    return spark.read.schema(PRODUCT_DETAIL_SCHEMA).json(path)

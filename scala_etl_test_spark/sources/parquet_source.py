@@ -57,12 +57,6 @@ def _freshness_token(path: str) -> tuple:
     return ("file", st.st_mtime_ns, st.st_size)
 
 
-def clear_schema_cache() -> None:
-    """Invalidate all cached schemas — for code that rewrites tables in
-    place within one process (test fixtures, regenerated testdata)."""
-    _SCHEMA_CACHE.clear()
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing ``events.ts`` to a session-tz
     TIMESTAMP regardless of how the generator wrote it:

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from scala_etl_test_spark.operators.cluster import _checkpoint_counted, _grow_to_fixpoint
 from scala_etl_test_spark.operators.dedup import (
     build_minhash_index,
     incremental_near_duplicates,
@@ -253,8 +254,9 @@ def forget_from_index(
     no shuffle). With closure_rounds defaulting to 3 that is ≤3 linear
     scans total — the alternative (materializing the anti-joined index
     per round to scan incrementally) would WRITE a near-full index copy
-    per round, which is strictly worse. The per-round count probes are
-    driver-bounded scalars.
+    per round, which is strictly worse. Each round's growth count is
+    observed on that round's own checkpoint job (the loop is
+    ``operators/cluster._grow_to_fixpoint``), so no round runs a count job.
 
     The erased index is written to ``out_dir`` PRESERVING the per-batch
     ``batch_id=N`` delta layout (the stream's replay guards keep
@@ -275,15 +277,11 @@ def forget_from_index(
     empty_docs = spark.createDataFrame([], f"{id_col} BIGINT, {text_col} STRING")
 
     opt_col = id_col if id_col in optout.columns else optout.columns[0]
-    doomed = (
-        optout.select(F.col(opt_col).alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    seeds, n_optout = _checkpoint_counted(
+        optout.select(F.col(opt_col).alias(id_col)).distinct(), F.lit(True)
     )
-    n_optout = n_doomed = doomed.count()
-    rounds = 0
-    converged = False
-    for _ in range(closure_rounds):
+
+    def probe(_frontier: DataFrame, doomed: DataFrame, _round: int) -> DataFrame:
         d_shingles = idx_shingles.join(doomed, on=id_col, how="left_semi").localCheckpoint(
             eager=True
         )
@@ -309,18 +307,14 @@ def forget_from_index(
             new_shingles=d_shingles,
             new_bands=d_bands,
         )
-        neighbors = (
+        return (
             pairs.select(F.col("id_a").alias(id_col))
             .union(pairs.select(F.col("id_b").alias(id_col)))
             .distinct()
+            .join(doomed, on=id_col, how="left_anti")
         )
-        doomed = doomed.unionByName(neighbors).distinct().localCheckpoint(eager=True)
-        rounds += 1
-        grown = doomed.count()
-        if grown == n_doomed:
-            converged = True  # a fixpoint round: the closure is complete
-            break
-        n_doomed = grown
+
+    doomed, n_added, rounds, converged = _grow_to_fixpoint(probe, seeds, closure_rounds)
 
     import os
 
@@ -347,7 +341,7 @@ def forget_from_index(
 
     return {
         "n_optout": n_optout,
-        "n_forgotten": n_doomed,
+        "n_forgotten": n_optout + n_added,
         "rounds": rounds,
         "converged": converged or n_optout == 0,
     }

@@ -97,3 +97,16 @@ def test_tracked_scope_releases_only_scope_internal(spark):
     assert outer.is_cached              # caller's cache: untouched
     assert [id(df) for df in _TRACKED] == [id(outer)]
     assert release_persisted() == 1
+
+
+def test_label_spread_query_releases_its_assignment(spark, sf_dir):
+    """``q_label_spread`` persists its IVF assignment through
+    tracked_persist, so release_persisted() frees it: a bare ``.cache()``
+    would stay in the CacheManager for the life of the session."""
+    from scala_etl_test_spark.plans.queries import QUERIES
+
+    spark.catalog.clearCache()  # clean slate from other modules
+    release_persisted()
+    QUERIES["label_spread"](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    assert release_persisted() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

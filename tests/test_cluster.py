@@ -8,7 +8,6 @@ import pytest
 
 from scala_etl_test_spark.operators.cluster import (
     connected_components,
-    connected_components_alternating,
     dedup_keep_representative,
     forget_closure_ids,
 )
@@ -57,33 +56,6 @@ def test_closure_bfs_nonconvergence_raises(spark):
     optout = spark.createDataFrame([(0,)], "doc_id long")
     with pytest.raises(ValueError, match="did not converge"):
         forget_closure_ids(optout, _pairs(spark, edges))
-
-
-def test_alternating_matches_propagation(spark):
-    """Large-star/small-star must produce the identical (node, component)
-    set as plain propagation on cliques, chains, stars, and singletons."""
-    cases = [
-        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (21, 20)],
-        [(i, i + 1) for i in range(12)],  # chain
-        [(0, i) for i in range(1, 9)],  # star hub
-        [(2, 1), (1, 2), (3, 3), (5, 4)],  # dups, reversed, self-loop
-    ]
-    for edges in cases:
-        df = _pairs(spark, edges)
-        assert _comp(connected_components_alternating(df)) == _comp(
-            connected_components(df, max_rounds=40)
-        ), edges
-
-
-def test_alternating_survives_deep_chain(spark):
-    """A 50-deep chain (diameter 50) defeats default max_rounds=20 plain
-    propagation but converges for the alternating scheme in O(log n)
-    alternations — the structural reason the variant exists."""
-    edges = [(i, i + 1) for i in range(50)]
-    with pytest.raises(ValueError, match="did not converge"):
-        connected_components(_pairs(spark, edges))  # default max_rounds=20
-    got = _comp(connected_components_alternating(_pairs(spark, edges)))
-    assert got == {(i, 0) for i in range(51)}
 
 
 def test_keep_representative(spark):

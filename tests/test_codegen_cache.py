@@ -3,17 +3,18 @@
 - The session sizes Spark's generated-code cache, so rebuilding and rerunning
   a query compiles no class a second time (Spark's default 100-entry cache
   recompiled ~43 classes on every ``dedup_clusters`` rerun).
-- Connected-components and erasure-closure BFS rounds run no job besides
-  their own checkpoint: the convergence count is observed on that job
-  instead of being probed by a separate action.
+- Connected-components, erasure-closure BFS and label-spreading rounds run
+  no job besides their own checkpoint: the convergence count is observed
+  on that job instead of being probed by a separate action.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from scala_etl_test_spark.caching import release_persisted
-from scala_etl_test_spark.operators import cluster
+from scala_etl_test_spark.operators import cluster, labelspread
 from scala_etl_test_spark.plans.queries import QUERIES
 from scala_etl_test_spark.session import CODEGEN_CACHE_ENTRIES
 
@@ -25,6 +26,14 @@ def _compiles(spark) -> int:
 
 def _chain(spark, n: int):
     return spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a long, id_b long")
+
+
+def _spread_chain(spark, n: int):
+    """Label spreading from node 0 down an n-link chain: round r labels
+    node r, so the loop stops in round n + 1."""
+    seeds = spark.createDataFrame([(0, 1)], "node long, label int")
+    edges = _chain(spark, n).select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    return labelspread.label_spread(seeds, edges, rounds=20)
 
 
 def test_session_sizes_codegen_cache(spark):
@@ -89,8 +98,9 @@ def _loop_jobs(spark, monkeypatch, run) -> tuple[int, int, int]:
         lambda spark, n: cluster.forget_closure_ids(
             spark.createDataFrame([(0,)], "doc_id long"), _chain(spark, n)
         ),
+        _spread_chain,
     ],
-    ids=["connected_components", "forget_closure_ids"],
+    ids=["connected_components", "forget_closure_ids", "label_spread"],
 )
 def test_loop_rounds_run_only_their_checkpoint(spark, monkeypatch, loop):
     """Two more chain links cost exactly two more rounds, and those rounds

@@ -43,6 +43,29 @@ def test_seeds_never_change(spark):
     assert got == {1: (0, 0), 2: (1, 0)}
 
 
+def test_spreading_stops_once_a_round_labels_nothing(spark, monkeypatch):
+    """Rounds left over after the labels saturate change nothing, so the
+    loop stops at the first round that labels no node: the graph of
+    test_majority_vote_and_rounds saturates in 2 rounds, and a budget of
+    10 gives the same rows after 3 checkpointed rounds."""
+    from scala_etl_test_spark.operators import cluster
+
+    seeds = spark.createDataFrame([(1, 0), (2, 0), (3, 1)], "node long, label int")
+    edges = _edges(spark, [(4, 1, 0.9), (4, 2, 0.8), (4, 3, 0.7), (5, 4, 0.9)])
+    want = sorted(label_spread(seeds, edges, rounds=2).collect())
+
+    real, calls = cluster._checkpoint_counted, []
+
+    def counted(df, flag):
+        calls.append(1)
+        return real(df, flag)
+
+    monkeypatch.setattr(cluster, "_checkpoint_counted", counted)
+    got = sorted(label_spread(seeds, edges, rounds=10).collect())
+    assert got == want
+    assert len(calls) == 3, calls  # rounds 1 and 2 label a node, round 3 none
+
+
 def test_knn_edges_respect_cells_and_k(spark, sf_dir):
     from scala_etl_test_spark.operators.similarity import ivf_assign, stride_centroids
     from scala_etl_test_spark.sources.parquet_source import read_table

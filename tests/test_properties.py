@@ -65,11 +65,13 @@ def _union_find_components(n_nodes, edges):
 
 
 def test_cc_variants_match_union_find_on_random_graphs(spark):
-    """Both CC implementations must match an independent union-find on
-    seeded random graphs (sparse, dense, and multi-component)."""
+    """Connected components and the erasure-closure BFS must match an
+    independent union-find on seeded random graphs (sparse, dense, and
+    multi-component): the BFS from a seed set reaches exactly the
+    members of the seeds' components."""
     from scala_etl_test_spark.operators.cluster import (
         connected_components,
-        connected_components_alternating,
+        forget_closure_ids,
     )
 
     rng = random.Random(0)
@@ -84,12 +86,14 @@ def test_cc_variants_match_union_find_on_random_graphs(spark):
             (r["node"], r["component"])
             for r in connected_components(df, max_rounds=40).collect()
         }
-        got_alt = {
-            (r["node"], r["component"])
-            for r in connected_components_alternating(df).collect()
-        }
         assert got_prop == want, (edges, got_prop, want)
-        assert got_alt == want, (edges, got_alt, want)
+
+        comp_of = dict(want)
+        seeds = {min(comp_of), max(comp_of)}
+        want_closure = {n for n, c in want if c in {comp_of[s] for s in seeds}}
+        optout = spark.createDataFrame([(s,) for s in seeds], "doc_id long")
+        got_closure = {r["doc_id"] for r in forget_closure_ids(optout, df).collect()}
+        assert got_closure == want_closure, (edges, seeds, got_closure)
 
 
 def _ref_duplicate_spans(docs: dict[int, list[str]], k: int, min_count: int = 2):

@@ -968,6 +968,66 @@ def test_forget_from_index_no_double_count_inflation(spark, tmp_path):
     assert kept == {2}, f"over-erasure: non-duplicate doc 2 must survive, kept={kept}"
 
 
+def _forget_fixture(spark, sf_dir, tmp_path, case):
+    """(index_dir, optout, kwargs) of the three forget_from_index tests
+    above: a near-dup opt-out on the test corpus, an empty opt-out, and
+    the pinned three-document corpus."""
+    from scala_etl_test_spark.operators.dedup import minhash_near_duplicates
+    from scala_etl_test_spark.streaming.dedup import init_index
+
+    index_dir = str(tmp_path / case)
+    if case == "near_dup":
+        docs = read_table(spark, sf_dir, "documents")
+        kw = dict(num_hashes=16, bands=4, rows=4, shingle_n=3)
+        init_index(spark, index_dir, docs, "text", "doc_id", **kw)
+        pairs = minhash_near_duplicates(docs, "text", "doc_id", threshold=0.2, **kw)
+        optout_id = pairs.orderBy("id_a", "id_b").first()["id_a"]
+        optout = spark.createDataFrame([(optout_id,)], "doc_id long")
+        return index_dir, optout, dict(threshold=0.2, max_bucket=10_000)
+    if case == "empty":
+        docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+        init_index(spark, index_dir, docs, "text", "doc_id")
+        return index_dir, spark.createDataFrame([], "doc_id long"), {}
+    shared = " ".join(f"s{i}" for i in range(8))
+    docs = spark.createDataFrame(
+        [(1, shared + " a1 a2 a3 a4"), (2, shared + " b1 b2 b3 b4"), (3, shared + " a1 a2 a3 c1")],
+        "doc_id long, text string",
+    )
+    init_index(spark, index_dir, docs, "text", "doc_id", num_hashes=16, bands=16, rows=1)
+    optout = spark.createDataFrame([(1,)], "doc_id long")
+    return index_dir, optout, dict(threshold=0.5, closure_rounds=3)
+
+
+@pytest.mark.parametrize(
+    "case, want",
+    [
+        ("near_dup", {"n_optout": 1, "n_forgotten": 3, "rounds": 2, "converged": True}),
+        ("empty", {"n_optout": 0, "n_forgotten": 0, "rounds": 1, "converged": True}),
+        ("pinned", {"n_optout": 1, "n_forgotten": 2, "rounds": 2, "converged": True}),
+    ],
+)
+def test_forget_from_index_closure_runs_no_count(spark, sf_dir, tmp_path, monkeypatch, case, want):
+    """The closure's growth counts are observed on each round's checkpoint
+    job, so forget_from_index runs no ``DataFrame.count()``; the stats on
+    the default test corpus are the ones the count-probing loop reported
+    (a fixpoint round is still counted in ``rounds``)."""
+    from pyspark.sql import DataFrame
+
+    from scala_etl_test_spark.streaming.dedup import forget_from_index
+
+    index_dir, optout, kwargs = _forget_fixture(spark, sf_dir, tmp_path, case)
+    real, counts = DataFrame.count, []
+
+    def counted(self):
+        counts.append(1)
+        return real(self)
+
+    monkeypatch.setattr(DataFrame, "count", counted)
+    stats = forget_from_index(spark, index_dir, str(tmp_path / "out"), optout, **kwargs)
+    assert counts == []
+    assert stats == want
+
+
 def test_cdc_bucketed_state_survives_catalog_loss(spark, tmp_path):
     """Regression (round-8 review): the default in-memory catalog dies
     with the process, but the state parquet + BUCKETSPEC sidecar survive —
