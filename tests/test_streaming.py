@@ -854,7 +854,27 @@ def test_streaming_cdc_bucketed_late_batch_cannot_regress(spark, tmp_path):
     assert state == {1: "new", 2: "newest"}
 
 
-def test_forget_from_index_closure_and_erasure(spark, sf_dir, tmp_path):
+def _forget_without_count(monkeypatch, spark, *args, **kwargs):
+    """``forget_from_index`` checked to run no ``DataFrame.count()``: the
+    closure's growth counts are observed on each round's checkpoint job."""
+    from scala_etl_test_spark.streaming.dedup import forget_from_index
+
+    # the session's concrete DataFrame class, which overrides count()
+    frame_cls = type(spark.range(1))
+    real, counts = frame_cls.count, []
+
+    def counted(self):
+        counts.append(1)
+        return real(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "count", counted)
+        stats = forget_from_index(spark, *args, **kwargs)
+    assert counts == []
+    return stats
+
+
+def test_forget_from_index_closure_and_erasure(spark, sf_dir, tmp_path, monkeypatch):
     """Right-to-be-forgotten on the persisted LSH index: the closure is
     computed FROM THE INDEX ALONE (opting out one member of a near-dup
     cluster dooms its verified neighbors too), every doomed id's shingle
@@ -866,7 +886,7 @@ def test_forget_from_index_closure_and_erasure(spark, sf_dir, tmp_path):
         incremental_near_duplicates,
         minhash_near_duplicates,
     )
-    from scala_etl_test_spark.streaming.dedup import forget_from_index, init_index
+    from scala_etl_test_spark.streaming.dedup import init_index
 
     docs = read_table(spark, sf_dir, "documents")
     kw = dict(num_hashes=16, bands=4, rows=4, shingle_n=3)
@@ -880,11 +900,12 @@ def test_forget_from_index_closure_and_erasure(spark, sf_dir, tmp_path):
     optout = spark.createDataFrame([(optout_id,)], "doc_id long")
 
     out_dir = str(tmp_path / "fidx_erased")
-    stats = forget_from_index(
-        spark, index_dir, out_dir, optout, threshold=0.2, max_bucket=10_000
+    stats = _forget_without_count(
+        monkeypatch, spark, index_dir, out_dir, optout, threshold=0.2, max_bucket=10_000
     )
-    assert stats["n_optout"] == 1
-    assert stats["n_forgotten"] >= 2  # the opt-out plus its verified near-dup(s)
+    # on the default test corpus: the opt-out plus its two verified
+    # near-dups, found in one growth round and confirmed by the fixpoint round
+    assert stats == {"n_optout": 1, "n_forgotten": 3, "rounds": 2, "converged": True}
 
     erased_sh = spark.read.parquet(f"{out_dir}/shingles")
     erased_bd = spark.read.parquet(f"{out_dir}/bands")
@@ -920,23 +941,23 @@ def test_forget_from_index_closure_and_erasure(spark, sf_dir, tmp_path):
     assert probe_original.filter(F.col("id_a") < 1_000_000).count() > 0
 
 
-def test_forget_from_index_empty_optout_is_identity(spark, sf_dir, tmp_path):
-    from scala_etl_test_spark.streaming.dedup import forget_from_index, init_index
+def test_forget_from_index_empty_optout_is_identity(spark, sf_dir, tmp_path, monkeypatch):
+    from scala_etl_test_spark.streaming.dedup import init_index
 
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
     index_dir = str(tmp_path / "fidx2")
     init_index(spark, index_dir, docs, "text", "doc_id")
     out_dir = str(tmp_path / "fidx2_erased")
-    stats = forget_from_index(
-        spark, index_dir, out_dir, spark.createDataFrame([], "doc_id long")
+    stats = _forget_without_count(
+        monkeypatch, spark, index_dir, out_dir, spark.createDataFrame([], "doc_id long")
     )
-    assert stats["n_forgotten"] == 0
+    assert stats == {"n_optout": 0, "n_forgotten": 0, "rounds": 1, "converged": True}
     a = spark.read.parquet(f"{index_dir}/shingles")
     b = spark.read.parquet(f"{out_dir}/shingles")
     assert a.count() == b.count()
 
 
-def test_forget_from_index_no_double_count_inflation(spark, tmp_path):
+def test_forget_from_index_no_double_count_inflation(spark, tmp_path, monkeypatch):
     """Regression (round-8 review): the doomed rows are the probe batch
     and MUST be excluded from the index side of the closure probe —
     leaving them in unions duplicate (id, shingle) rows into the Jaccard
@@ -944,7 +965,7 @@ def test_forget_from_index_no_double_count_inflation(spark, tmp_path):
     neighbor crosses the threshold and gets over-erased. Pinned corpus:
     A–B true Jaccard 6/14 ≈ 0.43 (below threshold 0.5; the duplicated
     form would read 12/18 ≈ 0.67), A–C 0.818 (a true near-dup)."""
-    from scala_etl_test_spark.streaming.dedup import forget_from_index, init_index
+    from scala_etl_test_spark.streaming.dedup import init_index
 
     shared = " ".join(f"s{i}" for i in range(8))
     docs = spark.createDataFrame(
@@ -954,78 +975,18 @@ def test_forget_from_index_no_double_count_inflation(spark, tmp_path):
     index_dir = str(tmp_path / "dc_idx")
     init_index(spark, index_dir, docs, "text", "doc_id", num_hashes=16, bands=16, rows=1)
     out_dir = str(tmp_path / "dc_erased")
-    stats = forget_from_index(
-        spark, index_dir, out_dir,
+    stats = _forget_without_count(
+        monkeypatch, spark, index_dir, out_dir,
         spark.createDataFrame([(1,)], "doc_id long"),
         threshold=0.5, closure_rounds=3,
     )
-    assert stats["converged"] is True
+    assert stats["converged"] is True and stats["rounds"] == 2
     assert stats["n_forgotten"] == 2  # A and its TRUE near-dup C; never B
     kept = {
         r["doc_id"]
         for r in spark.read.parquet(f"{out_dir}/shingles").select("doc_id").distinct().collect()
     }
     assert kept == {2}, f"over-erasure: non-duplicate doc 2 must survive, kept={kept}"
-
-
-def _forget_fixture(spark, sf_dir, tmp_path, case):
-    """(index_dir, optout, kwargs) of the three forget_from_index tests
-    above: a near-dup opt-out on the test corpus, an empty opt-out, and
-    the pinned three-document corpus."""
-    from scala_etl_test_spark.operators.dedup import minhash_near_duplicates
-    from scala_etl_test_spark.streaming.dedup import init_index
-
-    index_dir = str(tmp_path / case)
-    if case == "near_dup":
-        docs = read_table(spark, sf_dir, "documents")
-        kw = dict(num_hashes=16, bands=4, rows=4, shingle_n=3)
-        init_index(spark, index_dir, docs, "text", "doc_id", **kw)
-        pairs = minhash_near_duplicates(docs, "text", "doc_id", threshold=0.2, **kw)
-        optout_id = pairs.orderBy("id_a", "id_b").first()["id_a"]
-        optout = spark.createDataFrame([(optout_id,)], "doc_id long")
-        return index_dir, optout, dict(threshold=0.2, max_bucket=10_000)
-    if case == "empty":
-        docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-        init_index(spark, index_dir, docs, "text", "doc_id")
-        return index_dir, spark.createDataFrame([], "doc_id long"), {}
-    shared = " ".join(f"s{i}" for i in range(8))
-    docs = spark.createDataFrame(
-        [(1, shared + " a1 a2 a3 a4"), (2, shared + " b1 b2 b3 b4"), (3, shared + " a1 a2 a3 c1")],
-        "doc_id long, text string",
-    )
-    init_index(spark, index_dir, docs, "text", "doc_id", num_hashes=16, bands=16, rows=1)
-    optout = spark.createDataFrame([(1,)], "doc_id long")
-    return index_dir, optout, dict(threshold=0.5, closure_rounds=3)
-
-
-@pytest.mark.parametrize(
-    "case, want",
-    [
-        ("near_dup", {"n_optout": 1, "n_forgotten": 3, "rounds": 2, "converged": True}),
-        ("empty", {"n_optout": 0, "n_forgotten": 0, "rounds": 1, "converged": True}),
-        ("pinned", {"n_optout": 1, "n_forgotten": 2, "rounds": 2, "converged": True}),
-    ],
-)
-def test_forget_from_index_closure_runs_no_count(spark, sf_dir, tmp_path, monkeypatch, case, want):
-    """The closure's growth counts are observed on each round's checkpoint
-    job, so forget_from_index runs no ``DataFrame.count()``; the stats on
-    the default test corpus are the ones the count-probing loop reported
-    (a fixpoint round is still counted in ``rounds``)."""
-    from pyspark.sql import DataFrame
-
-    from scala_etl_test_spark.streaming.dedup import forget_from_index
-
-    index_dir, optout, kwargs = _forget_fixture(spark, sf_dir, tmp_path, case)
-    real, counts = DataFrame.count, []
-
-    def counted(self):
-        counts.append(1)
-        return real(self)
-
-    monkeypatch.setattr(DataFrame, "count", counted)
-    stats = forget_from_index(spark, index_dir, str(tmp_path / "out"), optout, **kwargs)
-    assert counts == []
-    assert stats == want
 
 
 def test_cdc_bucketed_state_survives_catalog_loss(spark, tmp_path):
