@@ -35,7 +35,6 @@ near-dup output matches the md5 run on the fixture corpus.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -172,70 +171,17 @@ def keyed_hash(*cols: Column) -> Column:
     return F.md5(F.concat_ws("|", *cols))
 
 
-# Logical nodes whose OUTPUT partition count is governed by
-# spark.sql.shuffle.partitions / AQE — i.e. already sized to the cluster.
-# All patterns match at line start after the plan tree-drawing prefix, so
-# column names can't false-positive.
-_GOVERNED_NODE_RE = re.compile(
-    r"^[\s:+-]*(?:Join|Aggregate|Deduplicate|Distinct|RebalancePartitions"
-    r"|Intersect|Except|CoGroup|FlatMapGroups)\b"
-)
-# Window is governed ONLY when it has a partitionSpec: an empty PARTITION BY
-# range-partitions everything into ONE partition (ADVICE r6). Rendering:
-# `Window [exprs], [partSpec], [orderSpec]` vs `Window [exprs], [orderSpec]`
-# — and a 2-group form whose tail has no ASC/DESC is partitionBy-without-
-# orderBy (partitioned, governed).
-_WINDOW_RE = re.compile(r"^[\s:+-]*Window \[")
-# Explicit-count partitioning nodes: `Repartition N, true` (repartition(N)) /
-# `Repartition N, false` (coalesce(N)); `RepartitionByExpression [...]` with
-# an optional trailing count (absent ⇒ defaults to shuffle.partitions).
-_REPARTITION_RE = re.compile(r"^[\s:+-]*Repartition (\d+), (?:true|false)\b")
-_REPARTITION_EXPR_RE = re.compile(r"^[\s:+-]*RepartitionByExpression \[[^\]]*\](?:, (\d+))?")
-# `Sort [...], true` = global orderBy (range-partitions to shuffle.partitions);
-# `Sort [...], false` = sortWithinPartitions (preserves child partitioning).
-_SORT_RE = re.compile(r"^[\s:+-]*Sort \[.*\], (true|false)\b")
-_LIMIT_RE = re.compile(r"^[\s:+-]*(?:GlobalLimit|LocalLimit)\b")
-
-
-def _planned_wide_enough(analyzed: str, target: int) -> bool | None:
-    """Decide from the analyzed logical plan STRING whether the plan's
-    output parallelism already covers ``target`` partitions.
-
-    Walks the pre-order rendering top-down, so the first partitioning-
-    setting node found is the one nearest the root — the one that governs
-    output partitioning (narrow ops preserve their child's). Returns True
-    (pass through), False (needs the spread), or None (no partitioning-
-    setting node at all: a scan + narrow ops — decide from scan size)."""
-    for line in analyzed.splitlines():
-        if _WINDOW_RE.match(line):
-            groups = line.split("], [")
-            if len(groups) >= 3:
-                return True  # partitioned window: shuffle.partitions-governed
-            if len(groups) < 2:
-                # single bracket group: BOTH partitionSpec and orderSpec
-                # empty (Window.partitionBy() with no orderBy) — collapses
-                # output to ONE partition (ADVICE r7)
-                return False
-            tail = groups[-1]
-            if " ASC" in tail or " DESC" in tail:
-                return False  # empty PARTITION BY: output is ONE partition
-            return True  # partitionBy without orderBy
-        if _GOVERNED_NODE_RE.match(line):
-            return True
-        m = _REPARTITION_RE.match(line)
-        if m:
-            return int(m.group(1)) >= target
-        m = _REPARTITION_EXPR_RE.match(line)
-        if m:
-            return m.group(1) is None or int(m.group(1)) >= target
-        m = _SORT_RE.match(line)
-        if m:
-            if m.group(1) == "true":
-                return True
-            continue  # sortWithinPartitions: look past it at the child
-        if _LIMIT_RE.match(line):
-            return False  # limit collapses downstream parallelism
-    return None
+def _output_partitions(df: DataFrame) -> int:
+    """Partition count the physical plan declares for its output — the
+    initial plan under AQE (with its exchanges, not executed), so reading
+    it runs no job. 0 when the plan declares none (a file scan, or a narrow
+    operator over one) and for a streaming frame, which has no batch plan."""
+    if df.isStreaming:
+        return 0
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.outputPartitioning().numPartitions()
 
 
 def _scan_size_bytes(df: DataFrame) -> int:
@@ -247,30 +193,10 @@ def _scan_size_bytes(df: DataFrame) -> int:
         return 0
 
 
-# Spark size-conf suffixes (JavaUtils.byteStringAsBytes): binary multiples.
-_SIZE_SUFFIX = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
-
-
 def _max_partition_bytes(df: DataFrame) -> int:
-    """Parse ``spark.sql.files.maxPartitionBytes`` including its
-    human-readable forms ('128m', '128MB') the way Spark itself does
-    (ADVICE r6: digit-stripping turned '128m' into 128 BYTES, inflating
-    the estimated split count ~10⁶× and skipping the spread on small
-    corpora — the direction this module's own docstring calls unsafe)."""
-    raw = str(
-        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    ).strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([a-z]*)", raw)
-    if not m or m.group(2) not in _SIZE_SUFFIX:
-        return 134217728
-    return int(m.group(1)) * _SIZE_SUFFIX[m.group(2)]
+    """``spark.sql.files.maxPartitionBytes`` in bytes, size suffixes
+    ('128m', '128MB') resolved by Spark's own conf reader."""
+    return df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
 def _spread(df: DataFrame, id_col: str | None) -> DataFrame:
@@ -287,47 +213,43 @@ def _spread(df: DataFrame, id_col: str | None) -> DataFrame:
     The guard must never COST anything at plan time (ADVICE r5: probing
     ``df.rdd`` under AQE eagerly executes the upstream stages of a
     shuffle-bearing plan — a whole wasted pass when the caller hands us a
-    join/groupBy-derived frame). So the decision uses only free plan
-    metadata, read top-down so the partitioning-setting node NEAREST THE
-    ROOT governs (a coalesce(1) above an aggregate caps parallelism at 1
-    no matter what sits below it):
+    join/groupBy-derived frame). So the decision reads the partition count
+    the physical plan declares for its output (:func:`_output_partitions`:
+    planned, never executed):
 
-    - join / aggregate / partitioned-window / rebalance / global-sort, or
-      an explicit repartition to ≥ cores ⇒ pass through — output
-      partitioning is governed by ``spark.sql.shuffle.partitions`` / AQE,
-      which the session sizes to the cluster. A Window with an EMPTY
-      partitionSpec is the exception (ADVICE r6): a global window
-      range-partitions to ONE partition, so it gets the spread;
-    - an explicit repartition/coalesce BELOW cores, or a limit ⇒ spread
-      (the old partition-count probe would have, too);
-    - no partitioning-setting node (scan + narrow ops) ⇒ estimate the
+    - ≥ cores (an exchange sized by ``spark.sql.shuffle.partitions``, which
+      the session sets to the cluster, or an explicit wide repartition)
+      ⇒ pass through;
+    - 0 (no declared partitioning: a file scan and the narrow operators
+      over it, a broadcast join streaming such a scan) ⇒ estimate the
       scan's split count from Catalyst's size statistic over
       ``maxPartitionBytes``: a corpus big enough to split into ≥ cores
       partitions passes through; a small scan — MANY tiny files included,
       which the reader packs into few splits regardless of file count —
       gets the spread. The estimate errs low (packing overhead, openCost),
       i.e. toward one redundant-but-compact pre-fanout shuffle: the safe
-      direction for this operator family.
+      direction for this operator family;
+    - anything else (coalesce, a narrow repartition, a limit, a window
+      without a partition spec) ⇒ spread.
 
-    Known gap (ADVICE r6, accepted): a cluster-governed node is trusted
-    even though AQE's partition COALESCING can shrink a tiny join/groupBy
-    exchange to 1-2 partitions at runtime before the fanout executes — the
-    guard reads the compile-time plan and cannot see that. At test scale
-    the fanout inputs that matter are either scans (covered by the size
-    estimate) or explicitly spread (``similarity.spread_by_cell`` pins an
-    explicit-count repartition precisely because AQE may coalesce
-    ENSURE_REQUIREMENTS exchanges); at corpus scale the shuffled bytes are
-    large enough that coalescing keeps ≥ cores partitions anyway.
+    Known gaps. (1) AQE's partition COALESCING can shrink a tiny
+    join/groupBy exchange to 1-2 partitions at runtime before the fanout
+    executes; the guard reads the initial plan and cannot see that. At
+    test scale the fanout inputs that matter are scans (covered by the
+    size estimate) or explicitly pinned (``similarity.spread_by_cell``);
+    at corpus scale the shuffled bytes are large enough that coalescing
+    keeps ≥ cores partitions anyway. (2) Operators that declare no
+    partitioning (Generate, Sample, a cached relation) read as 0 even
+    over an exchange, so they get one extra compact shuffle.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        analyzed = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # exotic plans that refuse inspection: never risk work
+        declared = _output_partitions(df)
+    except Exception:  # plans that refuse physical planning: never risk work
         return df
-    decision = _planned_wide_enough(analyzed, target)
-    if decision is True:
+    if declared >= target:
         return df
-    if decision is None and _scan_size_bytes(df) // _max_partition_bytes(df) + 1 >= target:
+    if declared == 0 and _scan_size_bytes(df) // _max_partition_bytes(df) + 1 >= target:
         return df
     if id_col is None:
         # keyless callers (no id column in the operator contract): plain

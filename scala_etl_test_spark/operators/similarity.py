@@ -283,10 +283,11 @@ def ivf_assign(
     packs into far fewer scan partitions than cores — the 10× ann stress
     measured the whole assignment serializing into ONE task (20k rows ×
     141 centroids ≈ 2.8M interpreted cosines) before any downstream
-    exchange could spread it. ``_spread`` (dedup's free-metadata guard)
-    repartitions the input by id FIRST, only when the plan underuses the
-    cluster — at warehouse scale the scan splits past the core count and
-    the guard passes through untouched."""
+    exchange could spread it. ``dedup._spread`` repartitions the input by
+    id FIRST, only when the partition count its physical plan declares (or,
+    for a bare scan, its estimated split count) is below the core count —
+    at warehouse scale the scan splits past the core count and the guard
+    passes through untouched."""
     from scala_etl_test_spark.operators.dedup import _spread
 
     df = _spread(df, id_col)
@@ -348,14 +349,12 @@ def spread_by_cell(df_assigned: DataFrame, cluster_col: str = "cluster_id") -> D
     """Pin the parallelism of an intra-cell fanout (self-join / kNN) fed by
     :func:`ivf_assign`.
 
-    The narrow assignment preserves its scan's partitioning, and the 1-row
-    centroid broadcast is a Join node, so neither AQE nor the dedup-module
-    ``_spread`` guard will widen it — on a single-file corpus the whole
-    Σ c_i² pairwise stage would otherwise run in ONE task (measured: the
-    sf0.1 label_spread kNN took 5.3 s single-task vs ~1 s spread). One
-    compact shuffle of the assigned rows buys (a) full-cluster parallelism
-    for the expensive pairwise cosines and (b) co-location on the join key
-    the self-join needs anyway, so the join itself adds no exchange. The
+    On a single-file corpus the whole Σ c_i² pairwise stage would
+    otherwise run in ONE task (measured: the sf0.1 label_spread kNN took
+    5.3 s single-task vs ~1 s spread). One compact shuffle of the assigned
+    rows buys (a) full-cluster parallelism for the expensive pairwise
+    cosines and (b) co-location on ``cluster_id``, the key the cell
+    self-join needs anyway, so the join itself adds no exchange. The
     explicit partition count (not bare ``repartition(col)``) keeps AQE from
     coalescing the tiny-at-test-scale exchange back down to one partition —
     the fanout work, not the input bytes, is what needs the width.

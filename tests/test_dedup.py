@@ -566,10 +566,15 @@ def test_spread_sees_through_partition_collapsing_nodes(spark, sf_dir):
         docs.groupBy("doc_id").count().coalesce(1),  # coalesce above the agg governs
         docs.limit(50),
         docs.sortWithinPartitions("doc_id"),  # preserves the 1-file layout below
+        # a broadcast join keeps its streamed side's one-file scan layout
+        docs.join(F.broadcast(docs.select("doc_id").limit(3)), "doc_id"),
     ):
         out = _spread(collapsed, "doc_id")
         assert out is not collapsed
         assert out.rdd.getNumPartitions() == target
+    # a streaming source has no batch plan to read: it gets the spread
+    stream = spark.readStream.schema(docs.schema).parquet(f"{sf_dir}/documents.parquet")
+    assert _spread(stream, "doc_id") is not stream
     # cluster-governed top nodes -> pass through untouched
     for governed in (
         docs.orderBy("doc_id"),  # global sort range-partitions
@@ -629,9 +634,6 @@ def test_max_partition_bytes_parses_size_suffixes(spark):
             ("128MB", 128 << 20),
             ("1g", 1 << 30),
             ("64k", 64 << 10),
-            # (an unparseable value is rejected by Spark's own conf
-            # validation at set time, so the parser's fallback branch is
-            # unreachable through the conf — kept for defensive depth)
         ]:
             spark.conf.set(key, raw)
             assert _max_partition_bytes(df) == want, raw
@@ -697,6 +699,20 @@ def test_spread_never_executes_shuffle_bearing_input(spark, sf_dir):
     # join-derived likewise (the duplicate_spans / incremental-dedup shape)
     joined = docs.join(docs.select("doc_id"), on="doc_id").withColumn("z", boom("doc_id"))
     assert _spread(joined, "doc_id") is joined
+    # a cached frame: planning its in-memory relation must fill nothing
+    # (whether it passes through or gets the spread is not the point here)
+    sc = spark.sparkContext
+    group = "spread-cached-probe"
+    cached = poisoned.cache()
+    try:
+        sc.setJobGroup(group, group)
+        try:
+            _spread(cached, "doc_id")
+        finally:
+            sc.setJobGroup("spread-idle", "spread-idle")
+    finally:
+        cached.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_simhash_pairs_guard_persists_fingerprints(spark, docs):
