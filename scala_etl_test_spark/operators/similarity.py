@@ -257,7 +257,7 @@ def semantic_dedup_greedy(
 
 def ivf_assign(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | Column,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroid_id: str = "centroid_id",
@@ -268,15 +268,19 @@ def ivf_assign(
     scale this is the write-time partition key.
 
     Shape: the centroid table (small by construction — k = O(√n) rows)
-    is folded into ONE row holding a sorted ``array<struct<id, vec>>``,
-    broadcast as a 1-row scalar, and each source row picks
-    ``array_max(transform(cents, c -> (cosine, -c.id)))`` — highest
+    is folded into ONE row holding a sorted ``array<struct<cid, cvec,
+    cnorm>>``, broadcast as a 1-row scalar, and each source row picks
+    ``array_max(transform(cents, c -> (cosine, -c.cid)))`` — highest
     similarity, smallest centroid id on exact ties, the same order the
     previous ``max_by(id, struct(_sim, -id))`` formulation used. Earlier
     versions materialized the n·k crossed rows and hash-aggregated them
     back down to n (an n·k-row exchange per assignment); this computes the
     identical k cosines per row inside one projection, so re-deriving the
-    assignment costs a map, not a shuffle.
+    assignment costs a map, not a shuffle. ``centroids`` may instead be
+    that sorted array itself as a Column (``streaming/ann._frozen_centroids``
+    folds a frozen centroid set into one literal on the driver): it then
+    replaces the aggregate and its broadcast, which cost their own jobs
+    on every call, and the scoring projection is the same.
 
     Parallelism guard: the k-cosine projection is compute-heavy relative
     to the input bytes (k = O(√n) ⇒ n·k cosines), and a small-file corpus
@@ -310,19 +314,24 @@ def ivf_assign(
     # into every transform element) — the k-element scoring transform then
     # folds only the dot product per (row, centroid), not 5 arrays
     # (functions/vectors.cosine_from_norms).
-    cents = F.broadcast(
-        centroids.agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(centroid_id).alias("cid"),
-                        F.col(centroid_vec).alias("cvec"),
-                        l2_norm(centroid_vec).alias("cnorm"),
-                    )
+    if isinstance(centroids, Column):
+        with_cents = df.withColumn(cents_col, centroids)
+    else:
+        with_cents = df.crossJoin(
+            F.broadcast(
+                centroids.agg(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                F.col(centroid_id).alias("cid"),
+                                F.col(centroid_vec).alias("cvec"),
+                                l2_norm(centroid_vec).alias("cnorm"),
+                            )
+                        )
+                    ).alias(cents_col)
                 )
-            ).alias(cents_col)
+            )
         )
-    )
     best = F.array_max(
         F.transform(
             F.col(cents_col),
@@ -335,8 +344,7 @@ def ivf_assign(
         )
     )
     return (
-        df.crossJoin(cents)
-        .withColumn(norm_col, l2_norm(vec_col))
+        with_cents.withColumn(norm_col, l2_norm(vec_col))
         .select(
             id_col,
             *[c for c in df.columns if c != id_col],

@@ -10,7 +10,13 @@ pieces live in operators/similarity.py):
   to its cell (narrow row-local argmax against the FROZEN centroid set)
   and appended under ``cluster_id=K/batch_id=N/`` — per-batch work is
   O(batch·k) compute + an O(batch) write, INDEPENDENT of corpus size
-  (``tools/stress_streaming.py --twin ann_append`` pins the flat trend);
+  (``tools/stress_streaming.py --twin ann_append`` pins the flat trend).
+  The centroids are read once per append on the driver
+  (:func:`_frozen_centroids`, pyarrow, no Spark job) and ride in the plan
+  as one folded literal, so an append runs no job to re-read, aggregate
+  or broadcast them: 3 jobs (the batch spread, the cell-routing exchange
+  and the write) instead of 6, and a small batch's write runs on every
+  core (:func:`_route_by_cell`);
 - **erase**: ``forget_from_ivf`` with ``sub_partition_cols=["batch_id"]``
   — cell-local rewrite that preserves the delta spine;
 - **compact**: :func:`compact_ivf_index` collapses the per-cell batch
@@ -43,7 +49,7 @@ from __future__ import annotations
 
 import pathlib
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from scala_etl_test_spark.streaming.compaction import (
     _finish_pending_cell_swaps_unlocked,
@@ -56,6 +62,12 @@ from scala_etl_test_spark.streaming.compaction import (
     swap_lock,
     write_watermark,
 )
+
+
+# The frozen centroids fold into the plan as one literal only while their
+# sidecar is smaller than this on disk (K=16 x 64 dims is ~10 KB); a larger
+# literal would ride in every stage's task binary and in the plan string.
+_FOLD_MAX_BYTES = 1 << 20
 
 
 def _centroids_dir(index_dir: str) -> str:
@@ -112,7 +124,7 @@ def init_ivf_index(
     cents = stride_centroids(seed, n_centroids, vec_col=vec_col, id_col=id_col)
     cents.write.mode("errorifexists").parquet(_centroids_dir(index_dir))
     (
-        ivf_assign(seed, read_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col)
+        ivf_assign(seed, _frozen_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col)
         .withColumn("batch_id", F.lit(-1))
         .transform(_route_by_cell)
         .write.partitionBy("cluster_id", "batch_id")
@@ -124,18 +136,81 @@ def init_ivf_index(
 def _route_by_cell(assigned: DataFrame) -> DataFrame:
     """Route assigned rows by cell before a ``partitionBy(cluster_id, ...)``
     write. Straight from the spread assignment, every task writes one file
-    per cell it holds (up to tasks × cells files per write). A plain
-    ``repartition("cluster_id")`` would give one file per cell but put a
-    whole cell in one task, however large the caller's cells are (K=1 is one
-    write task for the whole corpus). The rebalance hint hashes by cell too,
-    and AQE then coalesces small cells and splits any cell past
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` across tasks: one
-    file per cell at small cells, advisory-sized files at large ones."""
+    per cell it holds (up to tasks × cells files per write). The routing is
+    picked from Catalyst's size estimate of the write (plan metadata, no
+    job):
+
+    - below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: hash cells
+      over ``defaultParallelism`` tasks. No cell is large enough for a
+      rebalance to split it, so this is still one file per cell, and the
+      explicit count keeps AQE from coalescing the sub-MB exchange into ONE
+      write task (as it does a small rebalance or ``repartition(col)``);
+    - otherwise: the rebalance hint. It hashes by cell too, but AQE splits
+      any cell past the advisory size across tasks, so a huge cell (K=1 is
+      the whole corpus) is never one write task: advisory-sized files at
+      large cells.
+
+    A ``foreachBatch`` micro-batch of a file source (``stream_append_ivf``)
+    carries its files' size, so a small micro-batch takes the hash branch
+    like a direct append."""
+    from scala_etl_test_spark.operators.dedup import _scan_size_bytes
+
+    spark = assigned.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    if _scan_size_bytes(assigned) < advisory:
+        return assigned.repartition(spark.sparkContext.defaultParallelism, "cluster_id")
     return assigned.hint("rebalance", "cluster_id")
 
 
 def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(_centroids_dir(index_dir))
+
+
+def _l2_norm(vec: list | None) -> float | None:
+    """``functions.vectors.l2_norm`` on the driver: the same left-to-right
+    IEEE double fold, so the norm is bit-identical (NULL on a NULL vector
+    or element, as Spark's fold gives)."""
+    import math
+
+    if vec is None or any(x is None for x in vec):
+        return None
+    acc = 0.0
+    for x in vec:
+        acc += float(x) * float(x)
+    return math.sqrt(acc)
+
+
+def _frozen_centroids(spark: SparkSession, index_dir: str) -> Column | DataFrame:
+    """The frozen centroids as :func:`ivf_assign` takes them. While the
+    sidecar is under ``_FOLD_MAX_BYTES`` on disk it is read on the driver
+    with pyarrow (no Spark job) and returned as ONE foldable
+    ``array<struct<cid, cvec, cnorm>>`` expression sorted by id: a
+    ``from_json`` over one JSON literal, which the optimizer folds once per
+    plan (an element-by-element ``F.lit`` build costs ~1,000 Py4J calls per
+    append). ``cnorm`` is :func:`_l2_norm`, so cosines and ties match the
+    broadcast path bit for bit. A larger sidecar is returned as
+    :func:`read_centroids`, for the broadcast path."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    cdir = pathlib.Path(_centroids_dir(index_dir))
+    if sum(p.stat().st_size for p in cdir.glob("*.parquet")) >= _FOLD_MAX_BYTES:
+        return read_centroids(spark, index_dir)
+    table = pq.read_table(cdir)
+    ids = table.column("centroid_id").to_pylist()
+    vecs = table.column("centroid_vec").to_pylist()
+    cents = sorted(
+        ({"cid": i, "cvec": v, "cnorm": _l2_norm(v)} for i, v in zip(ids, vecs)),
+        key=lambda c: c["cid"],
+    )
+    id_type = from_arrow_type(table.schema.field("centroid_id").type).simpleString()
+    vec_type = from_arrow_type(table.schema.field("centroid_vec").type).simpleString()
+    schema = f"array<struct<cid:{id_type},cvec:{vec_type},cnorm:double>>"
+    return F.from_json(F.lit(json.dumps(cents)), schema)
 
 
 def read_ivf_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -178,7 +253,7 @@ def append_batch_to_ivf(
     from scala_etl_test_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
-        batch, read_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col
+        batch, _frozen_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col
     )
     (
         assigned.withColumn("batch_id", F.lit(batch_id))
@@ -394,8 +469,10 @@ def _compact_ivf_cells_locked(
     shutil.rmtree(staging, ignore_errors=True)
     # one job stages every planned cell: partition-pruned read (cell +
     # committed-generation predicates are both partition columns),
-    # per-cell hi assigned from a bounded literal map, cell-co-located
-    # write so the merge is also the small-file consolidation
+    # per-cell hi assigned from a bounded literal map, cell-routed write
+    # (_route_by_cell) so the merge is also the small-file consolidation:
+    # one file per cell while the merge is small, advisory-sized files
+    # for a cell too large for one write task
     hi_map = F.create_map(
         *[F.lit(v) for cell, gens in plan.items() for v in (cell, max(gens))]
     )
@@ -407,7 +484,7 @@ def _compact_ivf_cells_locked(
         spark.read.parquet(str(corpus))
         .filter(cond)
         .withColumn("batch_id", hi_map[F.col("cluster_id")])
-        .repartition("cluster_id")
+        .transform(_route_by_cell)
         .write.mode("overwrite")
         .partitionBy("cluster_id", "batch_id")
         .parquet(str(staging))

@@ -5,7 +5,13 @@ This is the standard Structured-Streaming pattern for sinks without
 native MERGE (plain parquet here; Delta/Iceberg swap in transparently):
 each micro-batch's changes collapse to latest-per-key and merge into the
 persisted table, and the CHECKPOINT makes the composition exactly-once —
-a replayed batch re-merges the same collapsed updates idempotently.
+a replayed batch re-merges the same collapsed updates idempotently. The
+plain path collapses ONCE per batch, inside the merge: the version-aware
+merge takes ``latest_per_key(state ∪ raw batch)`` and the versionless
+``upsert`` collapses its own updates. Pre-collapsing the batch gives the
+same state, because the winner under the (version desc, xxhash asc)
+total order is an associative argmax and ``latest_per_key`` is
+idempotent; it only cost a window, its exchange and its jobs per batch.
 
 With a ``version_col`` the merge is VERSION-AWARE (state ∪ batch →
 latest-per-key): a late micro-batch carrying older versions cannot
@@ -99,18 +105,22 @@ def read_state(spark: SparkSession, table_dir: str) -> DataFrame | None:
 
 def merge_into_state(
     spark: SparkSession,
-    collapsed: DataFrame,
+    batch: DataFrame,
     table_dir: str,
     key_cols: list[str],
     version_col: str | None = None,
 ) -> None:
-    """One CDC merge of an already latest-per-key ``collapsed`` batch into
-    the plain two-generation table at ``table_dir`` — the per-batch body of
-    :func:`stream_upsert`, module-level so the crossover stress harness can
-    time it head-to-head against :func:`merge_into_bucketed_state`."""
+    """One CDC merge of a micro-batch into the plain two-generation table
+    at ``table_dir`` — the per-batch body of :func:`stream_upsert`,
+    module-level so the crossover stress harness can time it head-to-head
+    against :func:`merge_into_bucketed_state`. ``batch`` may hold several
+    rows per key; they collapse here, once: by ``latest_per_key`` for the
+    first generation, inside the version-aware union, or by ``upsert``. A
+    batch that is already latest-per-key gives the same state (module
+    docstring)."""
     current_gen = _read_manifest(table_dir)
     if current_gen < 0:
-        merged = collapsed
+        merged = latest_per_key(batch, key_cols, version_col)
     else:
         base = spark.read.parquet(_gen_dir(table_dir, current_gen))
         if version_col is not None:
@@ -118,11 +128,11 @@ def merge_into_state(
             # batch's — a LATE micro-batch (older versions arriving
             # after newer state) must NOT regress the state, which
             # plain upsert's batch-always-wins replace would do
-            merged = latest_per_key(base.unionByName(collapsed), key_cols, version_col)
+            merged = latest_per_key(base.unionByName(batch), key_cols, version_col)
         else:
             # no version column: arrival order IS the order (SCD-1
             # batch-wins), the documented at-least-once contract
-            merged = upsert(base, collapsed, key_cols, version_col)
+            merged = upsert(base, batch, key_cols, version_col)
     new_gen = current_gen + 1
     merged.write.mode("overwrite").parquet(_gen_dir(table_dir, new_gen))
     _write_manifest(table_dir, new_gen)
@@ -145,9 +155,7 @@ def stream_upsert(
     callers typically ``awaitTermination()``."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        collapsed = latest_per_key(batch_df, key_cols, version_col)
-        merge_into_state(spark, collapsed, table_dir, key_cols, version_col)
+        merge_into_state(batch_df.sparkSession, batch_df, table_dir, key_cols, version_col)
 
     return (
         changes.writeStream.foreachBatch(_merge)

@@ -699,6 +699,58 @@ def test_streaming_cdc_late_batch_cannot_regress_state(spark, tmp_path):
     assert state == {1: "new", 2: "newest"}
 
 
+def test_streaming_cdc_equal_version_duplicates_collapse_once(spark, tmp_path, monkeypatch):
+    """Same-key, equal-version rows inside a micro-batch, and a batch row
+    tying the state row's version: the stream collapses each batch ONCE,
+    inside the merge, and the state equals latest-per-key over the whole
+    feed (the hash tie-break decides every tie, as a pre-collapsed batch
+    would)."""
+    import datetime as _dt
+    import os as _os
+    import time as _time
+
+    from scala_etl_test_spark.operators.merge import latest_per_key
+    from scala_etl_test_spark.streaming import cdc
+    from scala_etl_test_spark.streaming.sources import stream_events_parquet
+
+    schema = read_table(spark, "/root/testdata/sf0.001", "events").schema
+
+    def row(eid, ts_day, uid, etype):
+        return (eid, _dt.datetime(2024, 1, ts_day), uid, etype, 1.0, "{}")
+
+    batches = [
+        [row(1, 5, 1, "a"), row(2, 5, 1, "b"), row(3, 5, 2, "c"), row(4, 3, 3, "d")],
+        [row(5, 9, 1, "e"), row(6, 9, 1, "f"), row(7, 5, 2, "g"), row(8, 2, 3, "h"),
+         row(9, 2, 3, "i")],
+    ]
+    src = tmp_path / "dup_src"
+    src.mkdir()
+    base = _time.time() - 100
+    for i, rows in enumerate(batches):
+        out = tmp_path / f"_st_{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(str(out))
+        dst = src / f"{i:03d}.parquet"
+        shutil.copy(next(out.glob("part-*.parquet")), dst)
+        _os.utime(dst, (base + i, base + i))
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return latest_per_key(*args, **kwargs)
+
+    monkeypatch.setattr(cdc, "latest_per_key", counted)
+    table, ckpt = str(tmp_path / "dup_table"), str(tmp_path / "dup_ckpt")
+    cdc.stream_upsert(
+        stream_events_parquet(spark, str(src), max_files_per_trigger=1),
+        table, ckpt, ["user_id"], "ts",
+    ).awaitTermination()
+    assert len(calls) == len(batches)
+    feed = spark.createDataFrame([r for rows in batches for r in rows], schema)
+    want = {tuple(r) for r in latest_per_key(feed, ["user_id"], "ts").collect()}
+    assert {tuple(r) for r in cdc.read_state(spark, table).collect()} == want
+
+
 def test_stream_histogram_quantiles_match_batch_operator(spark, sf_dir, tmp_path):
     """Histograms are linear sketches: the folded per-batch partials must
     answer the SAME quantile estimates as the batch operator when the
@@ -1228,6 +1280,98 @@ class TestStreamAppendIvf:
         assert {c.name for c in cells} == {"batch_id=-1", "batch_id=1", "batch_id=2"}
         files = {str(c): len(list(c.glob("*.parquet"))) for c in cells}
         assert all(n == 1 for n in files.values()), files
+
+    def test_append_runs_no_centroid_job_and_writes_from_all_cores(self, spark, index):
+        """One append, counted by its job group: the frozen centroids fold
+        into the plan on the driver, so no job re-reads, aggregates or
+        broadcasts the sidecar (the broadcast path ran 6 jobs here), and
+        the small batch's cell-routed write runs in more than one task
+        (AQE used to coalesce the routing exchange into one)."""
+        from scala_etl_test_spark.streaming import append_batch_to_ivf
+        from scala_etl_test_spark.streaming.ann import _centroids_dir
+
+        d, emb = index
+        max_id = emb.agg(F.max("vec_id")).first()[0] + 1
+        batch = self._shifted(emb, 1, max_id)
+        sc = spark.sparkContext
+        group = "ivf-append-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            assert append_batch_to_ivf(spark, d, batch, 1)
+        finally:
+            sc.setJobGroup("ivf-append-idle", "ivf-append-idle")
+        st = sc.statusTracker()
+        jobs = sorted(st.getJobIdsForGroup(group))
+        assert 0 < len(jobs) <= 3, jobs
+        # the plans of the SQL executions those jobs ran under
+        plans, it = [], spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+        while it.hasNext():
+            ex = it.next()
+            ids, jit = set(), ex.jobs().keySet().iterator()
+            while jit.hasNext():
+                ids.add(int(jit.next()))
+            if ids & set(jobs):
+                plans.append(ex.physicalPlanDescription())
+        assert plans
+        assert not any(_centroids_dir(d) in p for p in plans)
+        write_stage = max(st.getJobInfo(jobs[-1]).stageIds)
+        assert st.getStageInfo(write_stage).numTasks > 1
+
+    def test_route_by_cell_picks_routing_from_size_estimate(self, spark):
+        """Plan only: a small write hashes cells over defaultParallelism
+        tasks; a write Catalyst estimates past the advisory partition size
+        keeps the rebalance, which splits large cells."""
+        from scala_etl_test_spark.streaming.ann import _route_by_cell
+
+        def physical(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        n = spark.sparkContext.defaultParallelism
+        small = spark.range(100).withColumn("cluster_id", F.col("id") % 3)
+        plan = physical(_route_by_cell(small))
+        assert "hashpartitioning(cluster_id#" in plan and f", {n}), REPARTITION_BY_NUM" in plan, plan
+        huge = spark.range(10**12).withColumn("cluster_id", F.col("id") % 3)
+        plan = physical(_route_by_cell(huge))
+        assert "REBALANCE_PARTITIONS_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
+
+    def test_folded_and_broadcast_centroids_assign_identically(self, spark, tmp_path, monkeypatch):
+        """The driver-folded centroid literal and the broadcast aggregate
+        assign every row the same cell: an exact-tie centroid pair goes to
+        the smaller id, and a zero-norm vector (NULL cosines) and a
+        zero-norm centroid score the same on both paths."""
+        import random
+
+        from pyspark.sql import Column
+
+        from scala_etl_test_spark.operators.similarity import ivf_assign
+        from scala_etl_test_spark.streaming import ann
+
+        rng = random.Random(7)
+        # stride centroids are the 4 smallest ids: 0 and 1 are an exact
+        # tie for every vector, 3 has zero norm
+        seed = [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]),
+                (3, [0.0, 0.0, 0.0])]
+        seed += [(i, [rng.uniform(-1, 1) for _ in range(3)]) for i in range(4, 40)]
+        schema = "vec_id long, embedding array<float>"
+        d = str(tmp_path / "ivf_index")
+        ann.init_ivf_index(spark, d, spark.createDataFrame(seed, schema), n_centroids=4)
+        batch_rows = [(100, [2.0, 0.0, 0.0]), (101, [0.0, 3.0, 0.0]), (102, [0.0, 0.0, 0.0]),
+                      (103, [1.0, 1.0, 0.0])]
+        batch_rows += [(i, [rng.uniform(-1, 1) for _ in range(3)]) for i in range(104, 160)]
+        batch = spark.createDataFrame(batch_rows, schema)
+
+        folded = ann._frozen_centroids(spark, d)
+        assert isinstance(folded, Column)
+        monkeypatch.setattr(ann, "_FOLD_MAX_BYTES", 0)
+        broadcast = ann._frozen_centroids(spark, d)
+        assert not isinstance(broadcast, Column)
+
+        def cells(cents):
+            return {r["vec_id"]: r["cluster_id"] for r in ivf_assign(batch, cents).collect()}
+
+        got = cells(folded)
+        assert got == cells(broadcast)
+        assert got[100] == 0 and got[101] == 2 and got[103] == 0, got
 
     def test_stream_end_to_end_and_erasure_replay_safety(self, spark, index, tmp_path):
         import os, time as _t
@@ -1991,6 +2135,9 @@ class TestIvfIndexCompaction:
         }
         assert gens == {"batch_id=2"}
         assert _marker_ids(d) == []
+        # the cell-routed merge writes one file per compacted cell
+        cells = list(_pl.Path(_corpus_dir(d)).glob("cluster_id=*/batch_id=2"))
+        assert cells and all(len(list(c.glob("*.parquet"))) == 1 for c in cells)
 
     def test_replay_after_compaction_is_noop(self, spark, index):
         from scala_etl_test_spark.streaming import append_batch_to_ivf, compact_ivf_index
