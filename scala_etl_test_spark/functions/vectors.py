@@ -10,6 +10,8 @@ bit-reproducible across runs and engines that fold sequentially.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, functions as F
 
 
@@ -34,6 +36,18 @@ def l2_norm(a: Column | str) -> Column:
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
+
+
+def l2_norm_value(values: list | None) -> float | None:
+    """:func:`l2_norm` of a driver-side list: the same left-to-right IEEE
+    double fold, so the value is bit-identical to the JVM's (None on a
+    None list or element, where the fold gives NULL)."""
+    if values is None or any(v is None for v in values):
+        return None
+    acc = 0.0
+    for v in values:
+        acc += float(v) * float(v)
+    return math.sqrt(acc)
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:

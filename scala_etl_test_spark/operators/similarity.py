@@ -31,6 +31,7 @@ from scala_etl_test_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity,
     l2_norm,
+    l2_norm_value,
 )
 
 
@@ -51,17 +52,11 @@ def cosine_topk(
     ``round_digits`` quantizes the similarity so results are reproducible
     across engines/architectures; ties break on ``id_col``.
     """
-    import math
-
-    # the query norm is a Python-side constant: the same left-to-right
-    # IEEE double fold the JVM expression would run, so the value is
-    # bit-identical — and the row norm folds once per row. 2 array folds
-    # per row instead of cosine_similarity's 5 (see
+    # the query norm is a Python-side constant (bit-identical to the JVM
+    # fold) and the row norm folds once per row: 2 array folds per row
+    # instead of cosine_similarity's 5 (see
     # functions/vectors.cosine_from_norms).
-    acc = 0.0
-    for v in query:
-        acc += float(v) * float(v)
-    qnorm = math.sqrt(acc)
+    qnorm = l2_norm_value(query)
     sim = cosine_from_norms(
         F.col(vec_col), _as_double_array(query), F.col("_nv"), F.lit(qnorm)
     )

@@ -168,34 +168,23 @@ def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(_centroids_dir(index_dir))
 
 
-def _l2_norm(vec: list | None) -> float | None:
-    """``functions.vectors.l2_norm`` on the driver: the same left-to-right
-    IEEE double fold, so the norm is bit-identical (NULL on a NULL vector
-    or element, as Spark's fold gives)."""
-    import math
-
-    if vec is None or any(x is None for x in vec):
-        return None
-    acc = 0.0
-    for x in vec:
-        acc += float(x) * float(x)
-    return math.sqrt(acc)
-
-
 def _frozen_centroids(spark: SparkSession, index_dir: str) -> Column | DataFrame:
     """The frozen centroids as :func:`ivf_assign` takes them. While the
     sidecar is under ``_FOLD_MAX_BYTES`` on disk it is read on the driver
     with pyarrow (no Spark job) and returned as ONE foldable
     ``array<struct<cid, cvec, cnorm>>`` expression sorted by id: a
     ``from_json`` over one JSON literal, which the optimizer folds once per
-    plan (an element-by-element ``F.lit`` build costs ~1,000 Py4J calls per
-    append). ``cnorm`` is :func:`_l2_norm`, so cosines and ties match the
-    broadcast path bit for bit. A larger sidecar is returned as
-    :func:`read_centroids`, for the broadcast path."""
+    plan (an element-by-element ``F.lit`` build costs one Py4J call per
+    element, ~1,000 for 16 centroids of 64 dims). ``cnorm`` is
+    ``l2_norm_value``, the driver-side twin of ``l2_norm``, so cosines and
+    ties match the broadcast path bit for bit. A larger sidecar is
+    returned as :func:`read_centroids`, for the broadcast path."""
     import json
 
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
+
+    from scala_etl_test_spark.functions.vectors import l2_norm_value
 
     cdir = pathlib.Path(_centroids_dir(index_dir))
     if sum(p.stat().st_size for p in cdir.glob("*.parquet")) >= _FOLD_MAX_BYTES:
@@ -204,7 +193,7 @@ def _frozen_centroids(spark: SparkSession, index_dir: str) -> Column | DataFrame
     ids = table.column("centroid_id").to_pylist()
     vecs = table.column("centroid_vec").to_pylist()
     cents = sorted(
-        ({"cid": i, "cvec": v, "cnorm": _l2_norm(v)} for i, v in zip(ids, vecs)),
+        ({"cid": i, "cvec": v, "cnorm": l2_norm_value(v)} for i, v in zip(ids, vecs)),
         key=lambda c: c["cid"],
     )
     id_type = from_arrow_type(table.schema.field("centroid_id").type).simpleString()
