@@ -699,7 +699,7 @@ def test_streaming_cdc_late_batch_cannot_regress_state(spark, tmp_path):
     assert state == {1: "new", 2: "newest"}
 
 
-def test_streaming_cdc_equal_version_duplicates_collapse_once(spark, tmp_path, monkeypatch):
+def test_streaming_cdc_equal_version_duplicates_collapse_once(spark, sf_dir, tmp_path, monkeypatch):
     """Same-key, equal-version rows inside a micro-batch, and a batch row
     tying the state row's version: the stream collapses each batch ONCE,
     inside the merge, and the state equals latest-per-key over the whole
@@ -713,7 +713,7 @@ def test_streaming_cdc_equal_version_duplicates_collapse_once(spark, tmp_path, m
     from scala_etl_test_spark.streaming import cdc
     from scala_etl_test_spark.streaming.sources import stream_events_parquet
 
-    schema = read_table(spark, "/root/testdata/sf0.001", "events").schema
+    schema = read_table(spark, sf_dir, "events").schema
 
     def row(eid, ts_day, uid, etype):
         return (eid, _dt.datetime(2024, 1, ts_day), uid, etype, 1.0, "{}")
@@ -1284,9 +1284,9 @@ class TestStreamAppendIvf:
     def test_append_runs_no_centroid_job_and_writes_from_all_cores(self, spark, index):
         """One append, counted by its job group: the frozen centroids fold
         into the plan on the driver, so no job re-reads, aggregates or
-        broadcasts the sidecar (the broadcast path ran 6 jobs here), and
+        broadcasts the sidecar (the broadcast path runs 6 jobs here), and
         the small batch's cell-routed write runs in more than one task
-        (AQE used to coalesce the routing exchange into one)."""
+        (AQE coalesces a sub-MB rebalance exchange into one)."""
         from scala_etl_test_spark.streaming import append_batch_to_ivf
         from scala_etl_test_spark.streaming.ann import _centroids_dir
 
