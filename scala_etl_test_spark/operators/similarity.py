@@ -24,6 +24,7 @@ import pathlib
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DataType
 
 from scala_etl_test_spark.caching import tracked_persist
 
@@ -250,6 +251,29 @@ def semantic_dedup_greedy(
 # ---------------------------------------------------------------------------
 
 
+def centroid_array(ids: list, vecs: list, id_type: DataType, vec_type: DataType) -> Column:
+    """A centroid set held on the driver as the ONE foldable expression
+    :func:`ivf_assign` scores against: its ``array<struct<cid, cvec,
+    cnorm>>``, sorted by id, the same value the broadcast aggregate builds.
+    It is a ``from_json`` over one JSON literal, which the optimizer folds
+    once per plan (an element-by-element ``F.lit`` build costs one Py4J
+    call per element, ~1,000 for 16 centroids of 64 dims). ``cnorm`` is
+    ``l2_norm_value``, the driver-side twin of ``l2_norm``, so cosines and
+    ties match the broadcast path bit for bit. ``id_type``/``vec_type``
+    are the centroid columns' Spark types."""
+    import json
+
+    cents = sorted(
+        ({"cid": i, "cvec": v, "cnorm": l2_norm_value(v)} for i, v in zip(ids, vecs)),
+        key=lambda c: c["cid"],
+    )
+    schema = (
+        f"array<struct<cid:{id_type.simpleString()},"
+        f"cvec:{vec_type.simpleString()},cnorm:double>>"
+    )
+    return F.from_json(F.lit(json.dumps(cents)), schema)
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame | Column,
@@ -272,10 +296,11 @@ def ivf_assign(
     back down to n (an n·k-row exchange per assignment); this computes the
     identical k cosines per row inside one projection, so re-deriving the
     assignment costs a map, not a shuffle. ``centroids`` may instead be
-    that sorted array itself as a Column (``streaming/ann._frozen_centroids``
-    folds a frozen centroid set into one literal on the driver): it then
-    replaces the aggregate and its broadcast, which cost their own jobs
-    on every call, and the scoring projection is the same.
+    that sorted array itself, as built on the driver by
+    :func:`centroid_array` (``streaming/ann`` folds its frozen centroid
+    set this way): it then replaces the aggregate and its broadcast, which
+    cost their own jobs on every call, and the scoring projection is the
+    same.
 
     Parallelism guard: the k-cosine projection is compute-heavy relative
     to the input bytes (k = O(√n) ⇒ n·k cosines), and a small-file corpus

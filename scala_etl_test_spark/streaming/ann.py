@@ -12,11 +12,12 @@ pieces live in operators/similarity.py):
   O(batch·k) compute + an O(batch) write, INDEPENDENT of corpus size
   (``tools/stress_streaming.py --twin ann_append`` pins the flat trend).
   The centroids are read once per append on the driver
-  (:func:`_frozen_centroids`, pyarrow, no Spark job) and ride in the plan
-  as one folded literal, so an append runs no job to re-read, aggregate
-  or broadcast them: 3 jobs (the batch spread, the cell-routing exchange
-  and the write) instead of 6, and a small batch's write runs on every
-  core (:func:`_route_by_cell`);
+  (:func:`_frozen_centroids`, pyarrow, no Spark job) and, while the set
+  is small, ride in the plan as one folded literal, so an append runs no
+  job to re-read, aggregate or broadcast them: 3 jobs (the batch spread,
+  the cell-routing exchange and the write) instead of 6, and a small
+  batch's write runs on up to one task per cell
+  (:func:`_route_by_cell`);
 - **erase**: ``forget_from_ivf`` with ``sub_partition_cols=["batch_id"]``
   — cell-local rewrite that preserves the delta spine;
 - **compact**: :func:`compact_ivf_index` collapses the per-cell batch
@@ -64,10 +65,12 @@ from scala_etl_test_spark.streaming.compaction import (
 )
 
 
-# The frozen centroids fold into the plan as one literal only while their
-# sidecar is smaller than this on disk (K=16 x 64 dims is ~10 KB); a larger
-# literal would ride in every stage's task binary and in the plan string.
-_FOLD_MAX_BYTES = 1 << 20
+# The frozen centroids fold into the plan as one literal only while they
+# hold fewer Arrow bytes than this (K=16 x 64 doubles is ~8.5 KB). Past it
+# the broadcast path appends faster: measured with 500-row appends on 4
+# cores, the fold wins up to K=128 x 64 (68 KB) and loses from K=256 x 64
+# (136 KB) on, by 1.2 s at K=2048 x 64 (1.1 MB).
+_FOLD_MAX_BYTES = 128 << 10
 
 
 def _centroids_dir(index_dir: str) -> str:
@@ -123,32 +126,34 @@ def init_ivf_index(
 
     cents = stride_centroids(seed, n_centroids, vec_col=vec_col, id_col=id_col)
     cents.write.mode("errorifexists").parquet(_centroids_dir(index_dir))
+    frozen, n_cells = _frozen_centroids(spark, index_dir)
     (
-        ivf_assign(seed, _frozen_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col)
+        ivf_assign(seed, frozen, vec_col=vec_col, id_col=id_col)
         .withColumn("batch_id", F.lit(-1))
-        .transform(_route_by_cell)
+        .transform(_route_by_cell, n_cells)
         .write.partitionBy("cluster_id", "batch_id")
         .parquet(_corpus_dir(index_dir))
     )
     _marker(index_dir, -1).mkdir(parents=True, exist_ok=True)
 
 
-def _route_by_cell(assigned: DataFrame) -> DataFrame:
+def _route_by_cell(assigned: DataFrame, n_cells: int) -> DataFrame:
     """Route assigned rows by cell before a ``partitionBy(cluster_id, ...)``
     write. Straight from the spread assignment, every task writes one file
     per cell it holds (up to tasks × cells files per write). The routing is
     picked from Catalyst's size estimate of the write (plan metadata, no
     job):
 
-    - below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: hash cells
-      over ``defaultParallelism`` tasks. No cell is large enough for a
+    - below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: hash the
+      ``n_cells`` cells (the caller's count) over at most
+      ``defaultParallelism`` tasks. No cell is large enough for a
       rebalance to split it, so this is still one file per cell, and the
       explicit count keeps AQE from coalescing the sub-MB exchange into ONE
       write task (as it does a small rebalance or ``repartition(col)``);
-    - otherwise: the rebalance hint. It hashes by cell too, but AQE splits
-      any cell past the advisory size across tasks, so a huge cell (K=1 is
-      the whole corpus) is never one write task: advisory-sized files at
-      large cells.
+    - otherwise, or when the estimate is unknown (0): the rebalance hint.
+      It hashes by cell too, but AQE splits any cell past the advisory
+      size across tasks, so a huge cell (K=1 is the whole corpus) is never
+      one write task: advisory-sized files at large cells.
 
     A ``foreachBatch`` micro-batch of a file source (``stream_append_ivf``)
     carries its files' size, so a small micro-batch takes the hash branch
@@ -159,8 +164,9 @@ def _route_by_cell(assigned: DataFrame) -> DataFrame:
     advisory = spark._jsparkSession.sessionState().conf().getConf(
         spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
     )
-    if _scan_size_bytes(assigned) < advisory:
-        return assigned.repartition(spark.sparkContext.defaultParallelism, "cluster_id")
+    if 0 < _scan_size_bytes(assigned) < advisory:
+        width = max(1, min(spark.sparkContext.defaultParallelism, n_cells))
+        return assigned.repartition(width, "cluster_id")
     return assigned.hint("rebalance", "cluster_id")
 
 
@@ -168,38 +174,30 @@ def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(_centroids_dir(index_dir))
 
 
-def _frozen_centroids(spark: SparkSession, index_dir: str) -> Column | DataFrame:
-    """The frozen centroids as :func:`ivf_assign` takes them. While the
-    sidecar is under ``_FOLD_MAX_BYTES`` on disk it is read on the driver
-    with pyarrow (no Spark job) and returned as ONE foldable
-    ``array<struct<cid, cvec, cnorm>>`` expression sorted by id: a
-    ``from_json`` over one JSON literal, which the optimizer folds once per
-    plan (an element-by-element ``F.lit`` build costs one Py4J call per
-    element, ~1,000 for 16 centroids of 64 dims). ``cnorm`` is
-    ``l2_norm_value``, the driver-side twin of ``l2_norm``, so cosines and
-    ties match the broadcast path bit for bit. A larger sidecar is
-    returned as :func:`read_centroids`, for the broadcast path."""
-    import json
-
+def _frozen_centroids(spark: SparkSession, index_dir: str) -> tuple[Column | DataFrame, int]:
+    """The frozen centroids as :func:`ivf_assign` takes them, and how many
+    there are. The sidecar is read on the driver with pyarrow (no Spark
+    job). While it holds under ``_FOLD_MAX_BYTES`` in memory it is returned
+    as one folded literal
+    (:func:`~scala_etl_test_spark.operators.similarity.centroid_array`);
+    a larger set is returned as :func:`read_centroids`, for the broadcast
+    path."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
 
-    from scala_etl_test_spark.functions.vectors import l2_norm_value
+    from scala_etl_test_spark.operators.similarity import centroid_array
 
-    cdir = pathlib.Path(_centroids_dir(index_dir))
-    if sum(p.stat().st_size for p in cdir.glob("*.parquet")) >= _FOLD_MAX_BYTES:
-        return read_centroids(spark, index_dir)
-    table = pq.read_table(cdir)
-    ids = table.column("centroid_id").to_pylist()
-    vecs = table.column("centroid_vec").to_pylist()
-    cents = sorted(
-        ({"cid": i, "cvec": v, "cnorm": l2_norm_value(v)} for i, v in zip(ids, vecs)),
-        key=lambda c: c["cid"],
+    table = pq.read_table(_centroids_dir(index_dir))
+    if table.nbytes >= _FOLD_MAX_BYTES:
+        return read_centroids(spark, index_dir), table.num_rows
+    field = table.schema.field
+    folded = centroid_array(
+        table.column("centroid_id").to_pylist(),
+        table.column("centroid_vec").to_pylist(),
+        from_arrow_type(field("centroid_id").type),
+        from_arrow_type(field("centroid_vec").type),
     )
-    id_type = from_arrow_type(table.schema.field("centroid_id").type).simpleString()
-    vec_type = from_arrow_type(table.schema.field("centroid_vec").type).simpleString()
-    schema = f"array<struct<cid:{id_type},cvec:{vec_type},cnorm:double>>"
-    return F.from_json(F.lit(json.dumps(cents)), schema)
+    return folded, table.num_rows
 
 
 def read_ivf_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -241,12 +239,11 @@ def append_batch_to_ivf(
         shutil.rmtree(leftover, ignore_errors=True)
     from scala_etl_test_spark.operators.similarity import ivf_assign
 
-    assigned = ivf_assign(
-        batch, _frozen_centroids(spark, index_dir), vec_col=vec_col, id_col=id_col
-    )
+    frozen, n_cells = _frozen_centroids(spark, index_dir)
     (
-        assigned.withColumn("batch_id", F.lit(batch_id))
-        .transform(_route_by_cell)
+        ivf_assign(batch, frozen, vec_col=vec_col, id_col=id_col)
+        .withColumn("batch_id", F.lit(batch_id))
+        .transform(_route_by_cell, n_cells)
         .write.mode("append")
         .partitionBy("cluster_id", "batch_id")
         .parquet(str(corpus))
@@ -473,7 +470,7 @@ def _compact_ivf_cells_locked(
         spark.read.parquet(str(corpus))
         .filter(cond)
         .withColumn("batch_id", hi_map[F.col("cluster_id")])
-        .transform(_route_by_cell)
+        .transform(_route_by_cell, len(plan))
         .write.mode("overwrite")
         .partitionBy("cluster_id", "batch_id")
         .parquet(str(staging))

@@ -1317,10 +1317,12 @@ class TestStreamAppendIvf:
         write_stage = max(st.getJobInfo(jobs[-1]).stageIds)
         assert st.getStageInfo(write_stage).numTasks > 1
 
-    def test_route_by_cell_picks_routing_from_size_estimate(self, spark):
-        """Plan only: a small write hashes cells over defaultParallelism
-        tasks; a write Catalyst estimates past the advisory partition size
-        keeps the rebalance, which splits large cells."""
+    def test_route_by_cell_picks_routing_from_size_estimate(self, spark, monkeypatch):
+        """Plan only: a small write hashes its cells over at most
+        defaultParallelism tasks; a write Catalyst estimates past the
+        advisory partition size, or whose estimate is unknown (0), keeps
+        the rebalance, which splits large cells."""
+        from scala_etl_test_spark.operators import dedup
         from scala_etl_test_spark.streaming.ann import _route_by_cell
 
         def physical(df):
@@ -1328,17 +1330,24 @@ class TestStreamAppendIvf:
 
         n = spark.sparkContext.defaultParallelism
         small = spark.range(100).withColumn("cluster_id", F.col("id") % 3)
-        plan = physical(_route_by_cell(small))
+        plan = physical(_route_by_cell(small, 1000))
         assert "hashpartitioning(cluster_id#" in plan and f", {n}), REPARTITION_BY_NUM" in plan, plan
+        # never more tasks than cells
+        plan = physical(_route_by_cell(small, 2))
+        assert ", 2), REPARTITION_BY_NUM" in plan, plan
         huge = spark.range(10**12).withColumn("cluster_id", F.col("id") % 3)
-        plan = physical(_route_by_cell(huge))
+        plan = physical(_route_by_cell(huge, 3))
+        assert "REBALANCE_PARTITIONS_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
+        monkeypatch.setattr(dedup, "_scan_size_bytes", lambda df: 0)
+        plan = physical(_route_by_cell(small, 3))
         assert "REBALANCE_PARTITIONS_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
 
     def test_folded_and_broadcast_centroids_assign_identically(self, spark, tmp_path, monkeypatch):
         """The driver-folded centroid literal and the broadcast aggregate
         assign every row the same cell: an exact-tie centroid pair goes to
         the smaller id, and a zero-norm vector (NULL cosines) and a
-        zero-norm centroid score the same on both paths."""
+        zero-norm centroid score the same on both paths. A centroid set
+        past ``_FOLD_MAX_BYTES`` is handed over for the broadcast path."""
         import random
 
         from pyspark.sql import Column
@@ -1360,18 +1369,18 @@ class TestStreamAppendIvf:
         batch_rows += [(i, [rng.uniform(-1, 1) for _ in range(3)]) for i in range(104, 160)]
         batch = spark.createDataFrame(batch_rows, schema)
 
-        folded = ann._frozen_centroids(spark, d)
-        assert isinstance(folded, Column)
-        monkeypatch.setattr(ann, "_FOLD_MAX_BYTES", 0)
-        broadcast = ann._frozen_centroids(spark, d)
-        assert not isinstance(broadcast, Column)
+        folded, n_cells = ann._frozen_centroids(spark, d)
+        assert isinstance(folded, Column) and n_cells == 4
 
         def cells(cents):
             return {r["vec_id"]: r["cluster_id"] for r in ivf_assign(batch, cents).collect()}
 
         got = cells(folded)
-        assert got == cells(broadcast)
+        assert got == cells(ann.read_centroids(spark, d))
         assert got[100] == 0 and got[101] == 2 and got[103] == 0, got
+        monkeypatch.setattr(ann, "_FOLD_MAX_BYTES", 0)
+        broadcast, n_cells = ann._frozen_centroids(spark, d)
+        assert not isinstance(broadcast, Column) and n_cells == 4
 
     def test_stream_end_to_end_and_erasure_replay_safety(self, spark, index, tmp_path):
         import os, time as _t
