@@ -181,12 +181,12 @@ def cross_source_overlap(
       pair matrix (profiled 2.3 s single-task stage inside
       corpus_release_report).
     """
-    from scala_etl_test_spark.operators.dedup import _spread
+    from scala_etl_test_spark.operators.partitioning import spread
 
     # the tokenize+shingle explode is the fanout-heavy stage; a small scan
     # (one file ⇒ one task at gate scale) must not serialize it
     sh_sets = (
-        _spread(df, None)
+        spread(df)
         .select(F.col(source_col).alias("_src"), words(text_col).alias("_w"))
         .select("_src", F.explode(shingles_from_words(F.col("_w"), shingle_n)).alias("shingle"))
         .groupBy("shingle")

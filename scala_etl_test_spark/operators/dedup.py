@@ -39,6 +39,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from scala_etl_test_spark.caching import tracked_persist
+from scala_etl_test_spark.operators.partitioning import pin_by_key, spread
 
 # ---------------------------------------------------------------------------
 # text normalization + shingling (shared by minhash / simhash / jaccard)
@@ -171,95 +172,6 @@ def keyed_hash(*cols: Column) -> Column:
     return F.md5(F.concat_ws("|", *cols))
 
 
-def _output_partitions(df: DataFrame) -> int:
-    """Partition count the physical plan declares for its output — the
-    initial plan under AQE (with its exchanges, not executed), so reading
-    it runs no job. 0 when the plan declares none (a file scan, or a narrow
-    operator over one) and for a streaming frame, which has no batch plan."""
-    if df.isStreaming:
-        return 0
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    return plan.outputPartitioning().numPartitions()
-
-
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the plan (file-size total for scans,
-    selectivity-scaled upward through operators) — plan metadata, no job."""
-    try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return 0
-
-
-def _max_partition_bytes(df: DataFrame) -> int:
-    """``spark.sql.files.maxPartitionBytes`` in bytes, size suffixes
-    ('128m', '128MB') resolved by Spark's own conf reader."""
-    return df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-
-
-def _spread(df: DataFrame, id_col: str | None) -> DataFrame:
-    """Repartition by id (round-robin when ``id_col`` is None) before a
-    fanout-heavy stage (explode × k hashes) — but ONLY when the input
-    underuses the cluster.
-
-    Document tables are small on disk relative to their shingle fanout, so a
-    scan can land in far fewer partitions than cores (the local testdata is
-    ONE file ⇒ one task does every hash). One cheap shuffle of the compact
-    doc rows buys full parallelism for the expensive stage — the same
-    reasoning holds on a cluster whenever fanout_work ≫ input_bytes.
-
-    The guard must never COST anything at plan time (ADVICE r5: probing
-    ``df.rdd`` under AQE eagerly executes the upstream stages of a
-    shuffle-bearing plan — a whole wasted pass when the caller hands us a
-    join/groupBy-derived frame). So the decision reads the partition count
-    the physical plan declares for its output (:func:`_output_partitions`:
-    planned, never executed):
-
-    - ≥ cores (an exchange sized by ``spark.sql.shuffle.partitions``, which
-      the session sets to the cluster, or an explicit wide repartition)
-      ⇒ pass through;
-    - 0 (no declared partitioning: a file scan and the narrow operators
-      over it, a broadcast join streaming such a scan) ⇒ estimate the
-      scan's split count from Catalyst's size statistic over
-      ``maxPartitionBytes``: a corpus big enough to split into ≥ cores
-      partitions passes through; a small scan — MANY tiny files included,
-      which the reader packs into few splits regardless of file count —
-      gets the spread. The estimate errs low (packing overhead, openCost),
-      i.e. toward one redundant-but-compact pre-fanout shuffle: the safe
-      direction for this operator family;
-    - anything else (coalesce, a narrow repartition, a limit, a window
-      without a partition spec) ⇒ spread.
-
-    Known gaps. (1) AQE's partition COALESCING can shrink a tiny
-    join/groupBy exchange to 1-2 partitions at runtime before the fanout
-    executes; the guard reads the initial plan and cannot see that. At
-    test scale the fanout inputs that matter are scans (covered by the
-    size estimate) or explicitly pinned (``similarity.spread_by_cell``);
-    at corpus scale the shuffled bytes are large enough that coalescing
-    keeps ≥ cores partitions anyway. (2) Operators that declare no
-    partitioning (Generate, Sample, a cached relation) read as 0 even
-    over an exchange, so they get one extra compact shuffle.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        declared = _output_partitions(df)
-    except Exception:  # plans that refuse physical planning: never risk work
-        return df
-    if declared >= target:
-        return df
-    if declared == 0 and _scan_size_bytes(df) // _max_partition_bytes(df) + 1 >= target:
-        return df
-    if id_col is None:
-        # keyless callers (no id column in the operator contract): plain
-        # round-robin — deterministic under retries via Spark's
-        # sort-before-repartition, and immune to the few-distinct-values
-        # skew a hash key like a 20-value source column would have
-        return df.repartition(target)
-    return df.repartition(target, id_col)
-
-
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -339,7 +251,7 @@ def shingle_table(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3)
     # with every genuinely-empty document and diverging from the oracle
     # (whose NULL shingle row crashes the hex seed instead).
     return (
-        _spread(
+        spread(
             df.filter(F.col(id_col).isNotNull() & F.col(text_col).isNotNull()),
             id_col,
         )
@@ -791,7 +703,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     groupBy pass (single shuffle), then the fingerprint folds the majority
     votes back into a long. Everything stays in whole-stage codegen.
     """
-    toks = _spread(df, id_col).select(F.col(id_col), F.explode(words(text_col)).alias("tok")).distinct()
+    toks = spread(df, id_col).select(F.col(id_col), F.explode(words(text_col)).alias("tok")).distinct()
     h = content_hash64(F.col("tok"))
     toks = toks.withColumn("h", h)
     aggs = [
@@ -1192,15 +1104,11 @@ def prefix_jaccard_join(
         F.transform("_sorted", lambda s: s["sh_h"]).alias("_set"),
         n.alias("_n"),
     )
-    # explicit-count repartitions pin the two verification exchanges: the
-    # candidate table is small in BYTES but each row costs an
-    # array_intersect over two full shingle sets, and AQE's byte-based
-    # coalescing otherwise collapses the exchange to ONE partition and runs
-    # the whole verification serially (profiled 1.3 s single-task stage at
-    # sf0.1; spread_by_cell precedent)
-    target = cands.sparkSession.sparkContext.defaultParallelism
+    # both verification joins ride pinned exchanges: the candidate table is
+    # small in bytes, but each row costs an array_intersect over two full
+    # shingle sets
     verified = (
-        cands.repartition(target, "id_a")
+        pin_by_key(cands, "id_a")
         .join(
             doc_sets.select(
                 F.col(id_col).alias("id_a"),
@@ -1209,7 +1117,7 @@ def prefix_jaccard_join(
             ),
             on="id_a",
         )
-        .repartition(target, "id_b")
+        .transform(pin_by_key, "id_b")
         .join(
             doc_sets.select(
                 F.col(id_col).alias("id_b"),
@@ -1384,12 +1292,12 @@ def edit_distance_pairs(
     hist = lambda t: F.transform(  # noqa: E731
         alphabet, lambda ch: F.length(t) - F.length(F.replace(t, ch))
     )
-    # _spread: the expensive work (37 replace-scans per doc, then contains/
+    # spread: the expensive work (37 replace-scans per doc, then contains/
     # levenshtein per candidate pair) is proportional to fanout, not input
     # bytes — a compacted corpus read as ONE scan partition serializes all
     # of it (measured: 33× wall at 10× data single-file vs 1.9× spread)
     base = (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(F.col(id_col).alias("_id"), normalize_text(text_col).alias("_t"))
         .withColumn("_len", F.length("_t"))
         .filter(F.col("_len") >= n_chunks)

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from scala_etl_test_spark.operators.partitioning import pin_by_key
+
 
 def item_item_cosine(
     df: DataFrame,
@@ -58,19 +60,14 @@ def item_item_cosine(
     Returns (item, neighbor, co_baskets, cosine, rank), rank 1..top_k.
     """
     # NULL basket ids never matched the previous shape's inner join on the
-    # basket key; the explicit filter pins that contract for the window form
-    # explicit-count repartition on the basket key, NOT the implicit
-    # ENSURE_REQUIREMENTS exchange the window would insert: AQE coalesces
-    # implicit small-bytes exchanges to ~1 partition, which would serialize
-    # everything downstream of here — the size-cap window, the array fold
-    # and the k²/2 pair explode are all compute-dense per byte (the
-    # spread_by_cell precedent). The window and the fold both ride this one
-    # pinned partitioning; no further basket-keyed exchange exists.
-    target = df.sparkSession.sparkContext.defaultParallelism
+    # basket key; the explicit filter pins that contract for the window form.
+    # The size-cap window, the array fold and the k²/2 pair explode all ride
+    # this one pinned basket partitioning; no further basket-keyed exchange
+    # exists.
     bi = (
         df.select(F.col(basket_col).alias("_b"), F.col(item_col).alias("_i"))
         .filter(F.col("_b").isNotNull())
-        .repartition(target, "_b")
+        .transform(pin_by_key, "_b")
         .distinct()
     )
     # basket-size cap via a window count (streams — no size-bounded buffer),

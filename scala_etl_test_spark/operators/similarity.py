@@ -34,6 +34,7 @@ from scala_etl_test_spark.functions.vectors import (
     l2_norm,
     l2_norm_value,
 )
+from scala_etl_test_spark.operators.partitioning import pin_by_key, spread
 
 
 def _as_double_array(values: list[float]) -> Column:
@@ -136,11 +137,10 @@ def semantic_dedup(
 
     Returns (id, cluster_id, is_semantic_dup).
     """
-    # spread: the pairwise stage must not inherit the narrow assignment's
-    # scan partitioning (see spread_by_cell); persisted: consumed by both
-    # sides of the intra-cluster self-join and by the final flag join.
-    assigned = spread_by_cell(
-        ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
+    # pinned: the pairwise stage needs cluster-wide width; persisted: both
+    # sides of the intra-cluster self-join and the final flag join read it.
+    assigned = pin_by_key(
+        ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col), "cluster_id"
     ).transform(tracked_persist)
     # norms precomputed per ROW off the cached assignment (n folds), not
     # per pair (Σc² folds) — functions/vectors.cosine_from_norms
@@ -207,11 +207,9 @@ def semantic_dedup_greedy(
     import numpy as np
     import pandas as pd
 
-    # spread: pins the sweep's partition count (the applyInPandas exchange
-    # is ENSURE_REQUIREMENTS, which AQE may coalesce to one task on
-    # tiny-bytes/huge-compute groups — see spread_by_cell)
-    assigned = spread_by_cell(
-        ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
+    # pinned: the sweep's own exchange would be coalesced by AQE
+    assigned = pin_by_key(
+        ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col), "cluster_id"
     )
 
     def _sweep(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -303,18 +301,11 @@ def ivf_assign(
     same.
 
     Parallelism guard: the k-cosine projection is compute-heavy relative
-    to the input bytes (k = O(√n) ⇒ n·k cosines), and a small-file corpus
-    packs into far fewer scan partitions than cores — the 10× ann stress
-    measured the whole assignment serializing into ONE task (20k rows ×
-    141 centroids ≈ 2.8M interpreted cosines) before any downstream
-    exchange could spread it. ``dedup._spread`` repartitions the input by
-    id FIRST, only when the partition count its physical plan declares (or,
-    for a bare scan, its estimated split count) is below the core count —
-    at warehouse scale the scan splits past the core count and the guard
-    passes through untouched."""
-    from scala_etl_test_spark.operators.dedup import _spread
-
-    df = _spread(df, id_col)
+    to the input bytes (k = O(√n) ⇒ n·k cosines); on a small-file corpus
+    the 10× ann stress measured it serializing into ONE task (20k rows ×
+    141 centroids ≈ 2.8M cosines). So the input goes through
+    ``partitioning.spread`` first, which passes a wide input through."""
+    df = spread(df, id_col)
     # Internal names must not collide with caller columns (ADVICE r7: a
     # caller column literally named ``_nv`` would be silently replaced by
     # the computed norm and carried into the output; ``_cents`` would make
@@ -371,26 +362,6 @@ def ivf_assign(
             (-best["nid"]).alias("cluster_id"),
         )
     )
-
-
-def spread_by_cell(df_assigned: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
-    """Pin the parallelism of an intra-cell fanout (self-join / kNN) fed by
-    :func:`ivf_assign`.
-
-    On a single-file corpus the whole Σ c_i² pairwise stage would
-    otherwise run in ONE task (measured: the sf0.1 label_spread kNN took
-    5.3 s single-task vs ~1 s spread). One compact shuffle of the assigned
-    rows buys (a) full-cluster parallelism for the expensive pairwise
-    cosines and (b) co-location on ``cluster_id``, the key the cell
-    self-join needs anyway, so the join itself adds no exchange. The
-    explicit partition count (not bare ``repartition(col)``) keeps AQE from
-    coalescing the tiny-at-test-scale exchange back down to one partition —
-    the fanout work, not the input bytes, is what needs the width.
-
-    At 100 TB ``cluster_id`` is the write-time partition key and this
-    becomes storage-aligned partition pruning rather than a shuffle."""
-    sc = df_assigned.sparkSession.sparkContext
-    return df_assigned.repartition(sc.defaultParallelism, cluster_col)
 
 
 def stride_centroids(

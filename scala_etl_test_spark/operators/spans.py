@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from scala_etl_test_spark.caching import tracked_persist
 
-from scala_etl_test_spark.operators.dedup import _spread, keyed_hash, words
+from scala_etl_test_spark.operators.dedup import keyed_hash, words
+from scala_etl_test_spark.operators.partitioning import spread
 
 
 def _kgram_seeds(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
@@ -54,9 +55,9 @@ def _kgram_seeds(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
     an opaque equality key to everything downstream (frequency counts and
     seed joins), so the family/type swap is invisible to the span logic.
 
-    ``_spread`` first: the per-position fanout is ~10²-10³× the input rows,
-    and a single-row-group source file would otherwise hand the whole
-    explode to one task — the same layout trap measured and fixed for
+    :func:`partitioning.spread` first: the per-position fanout is
+    ~10²-10³× the input rows, and a single-row-group source file would
+    otherwise hand the whole explode to one task — the same layout trap measured and fixed for
     edit-distance/winnowing in r4 (the compact doc rows are cheap to
     shuffle relative to the fanout)."""
     w = F.col("_w")
@@ -65,7 +66,7 @@ def _kgram_seeds(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
         lambda i: keyed_hash(F.concat_ws(" ", F.slice(w, i + 1, k))),
     )
     return (
-        _spread(docs, id_col).select(F.col(id_col), words(text_col).alias("_w"))
+        spread(docs, id_col).select(F.col(id_col), words(text_col).alias("_w"))
         .filter(F.size("_w") >= k)
         .select(F.col(id_col), F.posexplode(grams).alias("pos", "gram_h"))
     )

@@ -410,17 +410,18 @@ def winnow_fingerprints(
     minima inside one projection, whole-stage codegen, zero Python), but
     the per-row fanout is heavy (one md5 per gram, w-wide minima per
     position) — so the input is spread across cores first
-    (``dedup._spread``): a few small parquet files would otherwise glue
+    (``partitioning.spread``): a few small parquet files would otherwise glue
     into one scan partition and serialize the whole fanout (measured 10×
     at 10× data on a compacted corpus; ~2.9× with the spread). After
     that: one scan, one cheap doc-row shuffle, no other exchange; output
     is ~2/(w+1) of the gram count, and downstream joins on ``fp`` are
     uniform 8-byte keys.
     """
-    from scala_etl_test_spark.operators.dedup import _spread, content_hash64
+    from scala_etl_test_spark.operators.dedup import content_hash64
+    from scala_etl_test_spark.operators.partitioning import spread
 
     wds = F.filter(words(text_col), lambda x: x != "")
-    base = _spread(df, id_col).select(F.col(id_col), wds.alias("_w")).filter(
+    base = spread(df, id_col).select(F.col(id_col), wds.alias("_w")).filter(
         F.size("_w") >= k
     )
     gram = F.transform(

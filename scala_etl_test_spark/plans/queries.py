@@ -118,16 +118,16 @@ def q_split_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode back to 2 rows, decompose via getItem.
 
     Input layout guard (VERDICT r10 item 7, reversing the r5 call): the r5
-    decision not to ``_spread`` this 2× fanout was re-measured on a quiet
+    decision not to ``spread`` this 2× fanout was re-measured on a quiet
     window at r11 — the sf0.1 lineitem parquet packs into 3 scan splits
     vs 32 cores, and the spread variant ran 0.58 s vs 1.00 s plain at
     sf0.1 (and +0.05 s at sf0.01, shuffle overhead), cutting the 10×-data
     wall ratio from 2.4 (3.66 on the loaded r10 window) to ~1.2. The
     guard passes through untouched whenever the scan already splits past
     the core count — warehouse scale pays nothing."""
-    from scala_etl_test_spark.operators.dedup import _spread
+    from scala_etl_test_spark.operators.partitioning import spread
 
-    li = _spread(_t(spark, sf_dir, "lineitem"), "l_orderkey")
+    li = spread(_t(spark, sf_dir, "lineitem"), "l_orderkey")
     item = F.concat_ws("|", "l_returnflag", "l_linestatus", F.col("l_linenumber").cast("string"))
     encoded = li.select(
         "l_orderkey",

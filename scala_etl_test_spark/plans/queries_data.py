@@ -18,6 +18,7 @@ from scala_etl_test_spark.caching import tracked_persist
 from scala_etl_test_spark.operators import dedup as D
 from scala_etl_test_spark.operators import similarity as S
 from scala_etl_test_spark.operators import text as X
+from scala_etl_test_spark.operators.partitioning import pin_by_key, spread
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1301,7 +1302,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the lang/quality/token regex projection runs inside the
     # single-split documents scan stage — profiled as a 0.7 s one-task
     # stage at sf0.1 (the metrics are the compute-dense part of this plan)
-    docs = D._spread(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     pairs = q_dedup_minhash_pairs(spark, sf_dir)
     kept = dedup_keep_representative(docs, pairs, "doc_id")
     # all three metrics are row-local Column expressions → ONE projection
@@ -2952,10 +2953,9 @@ def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell sizes (Σ c_i²), never corpus n²."""
     emb = _t(spark, sf_dir, "embeddings")
     centroids = _scaled_centroids(emb, _n_rows(sf_dir, "embeddings"))
-    # spread: the cross-label pairwise stage must not inherit the narrow
-    # assignment's scan partitioning (operators/similarity.py:spread_by_cell);
+    # pinned: the cross-label pairwise stage needs cluster-wide width;
     # persisted: the mining self-join consumes the assignment on both sides.
-    assigned = S.spread_by_cell(S.ivf_assign(emb, centroids)).transform(tracked_persist)
+    assigned = pin_by_key(S.ivf_assign(emb, centroids), "cluster_id").transform(tracked_persist)
     return S.hard_negatives(assigned)
 
 
@@ -3551,10 +3551,9 @@ def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cent = _scaled_centroids(emb, _n_rows(sf_dir, "embeddings"))
-    # spread + persisted: the kNN self-join consumes the assignment on BOTH
+    # pinned + persisted: the kNN self-join consumes the assignment on BOTH
     # sides and its pairwise fanout needs cluster-wide parallelism
-    # (operators/similarity.py:spread_by_cell)
-    assigned = S.spread_by_cell(S.ivf_assign(emb, cent)).transform(tracked_persist)
+    assigned = pin_by_key(S.ivf_assign(emb, cent), "cluster_id").transform(tracked_persist)
     edges = knn_edges_in_cells(assigned, k=5)
     seeds = emb.filter(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("node"), "label"

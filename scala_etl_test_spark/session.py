@@ -73,9 +73,10 @@ def build_session(
     - Python call-site capture off (module docstring): building a plan
       costs a third of the Py4J round trips; re-enable it through
       ``extra_conf`` for Python line numbers in error messages.
-    - Local mode sizes shuffle partitions to the local core count; on a real
-      cluster leave ``shuffle_partitions=None`` and let AQE coalesce from a
-      high initial value.
+    - ``spark.sql.shuffle.partitions`` is ``shuffle_partitions``, else the
+      ``SPARK_GRAFT_CPUS`` env var (default 32, also the local master's
+      core count). AQE coalesces down from it, and
+      ``operators.partitioning.pin_by_key`` pins at least that many tasks.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (

@@ -99,7 +99,7 @@ def footer_row_count(sf_dir: str, name: str) -> int:
     """Exact table row count from parquet FOOTER metadata — no Spark job,
     no data pages read (a footer is a few KB per file).
 
-    This is the free-guard twin of ``operators/dedup._scan_size_bytes``:
+    This is the free-guard twin of ``operators/partitioning._scan_size_bytes``:
     operators that size a partitioning key to the corpus (IVF centroid
     count, simhash piece count, blocking-key width) need n at plan-build
     time, and an eager ``df.count()`` there runs a whole Spark job before

@@ -52,6 +52,7 @@ import pathlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from scala_etl_test_spark.operators.partitioning import below_advisory_size, pin_by_key
 from scala_etl_test_spark.streaming.compaction import (
     _finish_pending_cell_swaps_unlocked,
     compaction_watermark,
@@ -144,12 +145,11 @@ def _route_by_cell(assigned: DataFrame, n_cells: int) -> DataFrame:
     picked from Catalyst's size estimate of the write (plan metadata, no
     job):
 
-    - below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: hash the
-      ``n_cells`` cells (the caller's count) over at most
-      ``defaultParallelism`` tasks. No cell is large enough for a
-      rebalance to split it, so this is still one file per cell, and the
-      explicit count keeps AQE from coalescing the sub-MB exchange into ONE
-      write task (as it does a small rebalance or ``repartition(col)``);
+    - below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: pin the
+      ``n_cells`` cells (the caller's count) with ``pin_by_key``, so AQE
+      cannot coalesce the sub-MB exchange into ONE write task (as it does a
+      small rebalance). No cell is large enough for a rebalance to split
+      it, so this is still one file per cell;
     - otherwise, or when the estimate is unknown (0): the rebalance hint.
       It hashes by cell too, but AQE splits any cell past the advisory
       size across tasks, so a huge cell (K=1 is the whole corpus) is never
@@ -158,15 +158,8 @@ def _route_by_cell(assigned: DataFrame, n_cells: int) -> DataFrame:
     A ``foreachBatch`` micro-batch of a file source (``stream_append_ivf``)
     carries its files' size, so a small micro-batch takes the hash branch
     like a direct append."""
-    from scala_etl_test_spark.operators.dedup import _scan_size_bytes
-
-    spark = assigned.sparkSession
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-    )
-    if 0 < _scan_size_bytes(assigned) < advisory:
-        width = max(1, min(spark.sparkContext.defaultParallelism, n_cells))
-        return assigned.repartition(width, "cluster_id")
+    if below_advisory_size(assigned):
+        return pin_by_key(assigned, "cluster_id", n_cells)
     return assigned.hint("rebalance", "cluster_id")
 
 

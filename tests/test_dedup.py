@@ -530,117 +530,6 @@ def test_simhash_pairs_auto_switches_to_banded_above_threshold(spark):
     }
 
 
-def test_spread_skips_well_partitioned_input(spark, sf_dir):
-    # _spread must not add a shuffle when the input's parallelism is already
-    # governed by an upstream exchange (a production table repartitioned to
-    # >= cores would otherwise be moved wholesale once per operator call).
-    from scala_etl_test_spark.operators.dedup import _spread
-    from scala_etl_test_spark.sources.parquet_source import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    pre = docs.repartition(target * 2, "doc_id")
-    assert _spread(pre, "doc_id") is pre  # pass-through, no new plan node
-    # single-file scan underuses the cores -> repartition kicks in
-    spread = _spread(docs, "doc_id")
-    assert spread is not docs
-    assert spread.rdd.getNumPartitions() == target
-
-
-def test_spread_sees_through_partition_collapsing_nodes(spark, sf_dir):
-    # The governing node is the one NEAREST THE ROOT: plans whose output
-    # parallelism is explicitly collapsed (coalesce/small repartition/limit)
-    # or merely narrow-sorted must still get the spread, while plans whose
-    # top partitioning node is cluster-governed pass through.
-    from pyspark.sql import functions as F
-
-    from scala_etl_test_spark.operators.dedup import _spread
-    from scala_etl_test_spark.sources.parquet_source import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    # output parallelism collapsed -> spread MUST kick in
-    for collapsed in (
-        docs.coalesce(1),
-        docs.repartition(max(1, target // 2)),
-        docs.groupBy("doc_id").count().coalesce(1),  # coalesce above the agg governs
-        docs.limit(50),
-        docs.sortWithinPartitions("doc_id"),  # preserves the 1-file layout below
-        # a broadcast join keeps its streamed side's one-file scan layout
-        docs.join(F.broadcast(docs.select("doc_id").limit(3)), "doc_id"),
-    ):
-        out = _spread(collapsed, "doc_id")
-        assert out is not collapsed
-        assert out.rdd.getNumPartitions() == target
-    # a streaming source has no batch plan to read: it gets the spread
-    stream = spark.readStream.schema(docs.schema).parquet(f"{sf_dir}/documents.parquet")
-    assert _spread(stream, "doc_id") is not stream
-    # cluster-governed top nodes -> pass through untouched
-    for governed in (
-        docs.orderBy("doc_id"),  # global sort range-partitions
-        docs.repartition("doc_id"),  # defaults to shuffle.partitions
-        docs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c")),
-    ):
-        assert _spread(governed, "doc_id") is governed
-
-
-def test_spread_global_window_gets_spread(spark, sf_dir):
-    # ADVICE r6: a Window with an EMPTY partitionSpec range-partitions its
-    # output to ONE partition — it must NOT pass as "cluster-governed",
-    # while a partitioned window still does.
-    from pyspark.sql import Window, functions as F
-
-    from scala_etl_test_spark.operators.dedup import _spread
-    from scala_etl_test_spark.sources.parquet_source import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    global_win = docs.withColumn(
-        "rn", F.row_number().over(Window.orderBy("doc_id"))
-    )
-    out = _spread(global_win, "doc_id")
-    assert out is not global_win
-    assert out.rdd.getNumPartitions() == target
-    partitioned_win = docs.withColumn(
-        "rn", F.row_number().over(Window.partitionBy("source").orderBy("doc_id"))
-    )
-    assert _spread(partitioned_win, "doc_id") is partitioned_win
-    # partitionBy without orderBy is still partitioned -> governed
-    part_only = docs.withColumn(
-        "s", F.sum("doc_id").over(Window.partitionBy("source"))
-    )
-    assert _spread(part_only, "doc_id") is part_only
-    # ADVICE r7: BOTH specs empty (Window.partitionBy() with no orderBy)
-    # renders a single bracket group — it also collapses output to ONE
-    # partition and must NOT be classified as cluster-governed.
-    both_empty = docs.withColumn("s", F.sum("doc_id").over(Window.partitionBy()))
-    out = _spread(both_empty, "doc_id")
-    assert out is not both_empty
-    assert out.rdd.getNumPartitions() == target
-
-
-def test_max_partition_bytes_parses_size_suffixes(spark):
-    # ADVICE r6: '128m' must parse as 128 MiB, not 128 bytes (which inflated
-    # the split estimate ~10^6x and skipped the spread on small corpora).
-    from scala_etl_test_spark.operators.dedup import _max_partition_bytes
-
-    df = spark.range(1)
-    key = "spark.sql.files.maxPartitionBytes"
-    original = spark.conf.get(key, "134217728")
-    try:
-        for raw, want in [
-            ("134217728", 134217728),
-            ("128m", 128 << 20),
-            ("128MB", 128 << 20),
-            ("1g", 1 << 30),
-            ("64k", 64 << 10),
-        ]:
-            spark.conf.set(key, raw)
-            assert _max_partition_bytes(df) == want, raw
-    finally:
-        spark.conf.set(key, original)
-
-
 def test_pair_overlap_twins_agree_on_distinct_pairs(spark):
     # the documented precondition: on DISTINCT candidate pairs the shuffled
     # groupBy twin and the row-local array_intersect twin are row-identical
@@ -673,46 +562,6 @@ def test_pair_overlap_twins_agree_on_distinct_pairs(spark):
             tuple(r) for r in _pair_overlap_rowlocal(pairs, sh, "doc_id", keep).select(cols).collect()
         )
         assert a == b, keep
-
-
-def test_spread_never_executes_shuffle_bearing_input(spark, sf_dir):
-    # ADVICE r5: probing df.rdd under AQE EXECUTES the upstream stages of a
-    # shuffle-bearing plan at _spread call time (work not reused by the plan
-    # built afterwards). The guard must decide from free metadata only: here
-    # the input is poisoned with a UDF that raises on ANY execution, so a
-    # regression back to eager probing fails loudly.
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import udf
-
-    from scala_etl_test_spark.operators.dedup import _spread
-    from scala_etl_test_spark.sources.parquet_source import read_table
-
-    boom = udf(lambda _: 1 // 0, "int")  # ZeroDivisionError if any task runs
-    docs = read_table(spark, sf_dir, "documents")
-    poisoned = (
-        docs.withColumn("z", boom("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.sum("z").alias("z"))
-    )
-    # aggregate-derived ⇒ parallelism is shuffle.partitions ⇒ pass through
-    assert _spread(poisoned, "doc_id") is poisoned
-    # join-derived likewise (the duplicate_spans / incremental-dedup shape)
-    joined = docs.join(docs.select("doc_id"), on="doc_id").withColumn("z", boom("doc_id"))
-    assert _spread(joined, "doc_id") is joined
-    # a cached frame: planning its in-memory relation must fill nothing
-    # (whether it passes through or gets the spread is not the point here)
-    sc = spark.sparkContext
-    group = "spread-cached-probe"
-    cached = poisoned.cache()
-    try:
-        sc.setJobGroup(group, group)
-        try:
-            _spread(cached, "doc_id")
-        finally:
-            sc.setJobGroup("spread-idle", "spread-idle")
-    finally:
-        cached.unpersist()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_simhash_pairs_guard_persists_fingerprints(spark, docs):

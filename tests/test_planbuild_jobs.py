@@ -2,11 +2,11 @@
 
 Building a registered query's DataFrame (calling the ``queries()`` entry)
 must not run Spark jobs — all compute belongs to the caller's ACTION. This
-generalizes the poisoned-UDF guard of ``test_dedup.py`` (which pins that
-``dedup._spread``, deciding from the physical plan's declared partition
-count, plans but never executes its input) to every registered query:
-hidden plan-time work is easy to re-introduce (an eager ``count()`` sizing
-probe, a ``localCheckpoint`` — whose ``eager=False`` form STILL
+generalizes the poisoned-UDF guard of ``test_partitioning.py`` (which pins
+that ``partitioning.spread``, deciding from the physical plan's declared
+partition count, plans but never executes its input) to every registered
+query: hidden plan-time work is easy to re-introduce (an eager ``count()``
+sizing probe, a ``localCheckpoint`` — whose ``eager=False`` form STILL
 materializes all upstream query stages under AQE via ``toRdd`` — or an
 ``rdd`` probe), and each one silently runs a whole job before the query's
 own action.

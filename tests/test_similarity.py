@@ -163,9 +163,9 @@ def test_ivf_assign_plan_is_narrow(spark):
     """On an input that already uses the cluster, the assignment adds NO
     exchange over the vector table (the only exchanges are the caller's
     own pre-spread and the 1-row centroid-fold broadcast side); on a
-    narrow input the guarded pre-spread injects exactly one id
-    repartition so the k-cosine projection can't serialize into one
-    task."""
+    narrow input the guarded pre-spread (``partitioning.spread``) injects
+    exactly one id repartition so the k-cosine projection can't serialize
+    into one task."""
     target = spark.sparkContext.defaultParallelism
     rows = [(i, [float(i), 1.0], 0) for i in range(8)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
@@ -181,9 +181,10 @@ def test_ivf_assign_plan_is_narrow(spark):
 
 def test_ivf_assign_spreads_narrow_parquet_scan(spark, sf_dir):
     """A small-file parquet corpus lands in fewer scan partitions than
-    cores; the guarded pre-spread must inject exactly one id repartition
-    so the n·k cosine projection cannot serialize into one task (the 10×
-    ann stress measured 2.8M single-task cosines without it)."""
+    cores; the guarded pre-spread (``partitioning.spread``) must inject
+    exactly one id repartition so the n·k cosine projection cannot
+    serialize into one task (the 10× ann stress measured 2.8M single-task
+    cosines without it)."""
     from scala_etl_test_spark.sources.parquet_source import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")

@@ -1322,7 +1322,7 @@ class TestStreamAppendIvf:
         defaultParallelism tasks; a write Catalyst estimates past the
         advisory partition size, or whose estimate is unknown (0), keeps
         the rebalance, which splits large cells."""
-        from scala_etl_test_spark.operators import dedup
+        from scala_etl_test_spark.operators import partitioning
         from scala_etl_test_spark.streaming.ann import _route_by_cell
 
         def physical(df):
@@ -1338,7 +1338,7 @@ class TestStreamAppendIvf:
         huge = spark.range(10**12).withColumn("cluster_id", F.col("id") % 3)
         plan = physical(_route_by_cell(huge, 3))
         assert "REBALANCE_PARTITIONS_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
-        monkeypatch.setattr(dedup, "_scan_size_bytes", lambda df: 0)
+        monkeypatch.setattr(partitioning, "_scan_size_bytes", lambda df: 0)
         plan = physical(_route_by_cell(small, 3))
         assert "REBALANCE_PARTITIONS_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
 

@@ -31,8 +31,9 @@ Replica construction traps (see also the r4/r5/r6 logs):
 - **single-file layout**: a compacted parquet file glues into ONE scan
   partition and serializes per-row fanout, masquerading as quadratic
   scaling. Replicas are written as 32-file directories. (The engine's
-  ``_spread`` guard also defends the single-file case at runtime; the
-  multi-file layout keeps the measurement about the OPERATOR.)
+  ``partitioning.spread`` guard also defends the single-file case at
+  runtime; the multi-file layout keeps the measurement about the
+  OPERATOR.)
 
 Requires ~10× the replicated tables' footprint free under ``out_dir``.
 """
