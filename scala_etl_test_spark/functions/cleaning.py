@@ -33,26 +33,3 @@ def int_div(a: Column | str, b: Column | str) -> Column:
     """
     ca, cb = _c(a).cast("long"), _c(b).cast("long")
     return F.when(cb != 0, ((ca - (ca % cb)) / cb).cast("long"))
-
-
-def zorder_key(cols: list, bits: int = 16):
-    """Z-order (Morton) interleaving of pre-scaled non-negative ints — a
-    multi-column clustering key for ``write_compacted(sort_by=[...])``:
-    sorting by the interleaved key keeps rows close in EVERY dimension
-    close on disk, so parquet row-group min/max stats prune scans filtered
-    on any of the dimensions (single-column sort only prunes its own).
-
-    Inputs must already be in [0, 2**bits); scale with
-    ``F.floor((c - min) / span * (2**bits - 1))`` from a stats pass.
-    Pure shift/mask arithmetic — portable to any engine.
-    """
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    key = F.lit(0).cast("long")
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            col = F.col(c) if isinstance(c, str) else c
-            bit = F.shiftright(col.cast("long"), b).bitwiseAND(F.lit(1))
-            key = key + (bit * F.lit(2 ** (b * n + i)).cast("long"))
-    return key

@@ -1138,43 +1138,6 @@ def prefix_jaccard_join(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def lsh_collision_probability(s: float, bands: int, rows: int) -> float:
-    """P(candidate | Jaccard = s) for MinHash-LSH banding:
-    ``1 − (1 − s^rows)^bands`` — the S-curve that makes banding a
-    similarity filter."""
-    if not 0.0 <= s <= 1.0:
-        raise ValueError("similarity must be in [0, 1]")
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def choose_bands_rows(num_hashes: int, threshold: float) -> tuple[int, int]:
-    """Pick (bands, rows) with bands·rows = num_hashes whose S-curve
-    midpoint ``(1/bands)^(1/rows)`` lands closest to ``threshold`` —
-    the standard knob for trading false positives (curve too far left)
-    against false negatives (too far right). Pure driver-side math; feed
-    the result to :func:`lsh_bands` / :func:`minhash_near_duplicates`.
-
-    Ties (two factorizations equally close) resolve to the larger
-    ``rows`` — a steeper curve, i.e. fewer false positives for the same
-    midpoint, which is the right default when candidate verification is
-    the expensive stage."""
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best: tuple[float, int, int] | None = None
-    for rows in range(1, num_hashes + 1):
-        if num_hashes % rows:
-            continue
-        bands = num_hashes // rows
-        mid = (1.0 / bands) ** (1.0 / rows)
-        key = (abs(mid - threshold), -rows)
-        if best is None or key < (best[0], -best[2]):
-            best = (abs(mid - threshold), bands, rows)
-    assert best is not None
-    return best[1], best[2]
-
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     text_col: str,

@@ -1,65 +1,16 @@
-"""Runtime partition diagnostics: the measurement half of skew handling.
+"""Join diagnostics: the measurement half of skew handling.
 
-operators/skew.py supplies the remedies (salted joins, adaptive salting,
-salted distinct-count); this module supplies the DIAGNOSIS — per-partition
-row counts and the skew ratio — so a pipeline can alarm on imbalance
-before a straggler eats the stage. Works on any DataFrame at its CURRENT
-physical partitioning (call it right after the exchange under suspicion).
-
-Implementation is ``spark_partition_id()`` + one tiny groupBy — the
-aggregate's exchange carries one row per partition, so the probe costs a
-single pass over the data and nothing else. The output is inherently
-execution-dependent (it measures the physical layout, not the data's
-logical content), so it is test-pinned rather than oracle-gated.
+operators/skew.py supplies the remedies (salted joins, salted
+distinct-count); this module supplies the pre-flight DIAGNOSIS of an
+equi-join — its exact output cardinality and the keys that dominate it —
+without executing the join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from scala_etl_test_spark.caching import tracked_persist
-
-
-def partition_stats(df: DataFrame) -> DataFrame:
-    """Per-partition row counts: (partition_id, n_rows)."""
-    return (
-        df.select(F.spark_partition_id().alias("partition_id"))
-        .groupBy("partition_id")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-def skew_report(df: DataFrame) -> Row:
-    """One-row summary: (n_partitions, n_empty, min_rows, max_rows,
-    avg_rows, skew_ratio) where skew_ratio = max/avg over NON-EMPTY
-    partitions (the straggler factor: how much longer the worst task runs
-    than the average). Empty partitions are reported separately — they
-    dilute avg and hide skew if mixed in.
-
-    Measured with ONE ``mapPartitions`` pass over a single pinned RDD plan
-    — one of the rare legitimate RDD uses: the DataFrame route would plan
-    the counting job and ``getNumPartitions`` independently, and with AQE
-    the two executions can disagree on the partition count (n_empty could
-    even go negative). The collect ships one int per partition."""
-    counts = (
-        df.rdd.mapPartitions(lambda it: iter([sum(1 for _ in it)])).collect()
-    )
-    n_parts = len(counts)
-    nonempty = [c for c in counts if c > 0]
-    if not nonempty:
-        return Row(
-            n_partitions=n_parts, n_empty=n_parts, min_rows=0, max_rows=0,
-            avg_rows=0.0, skew_ratio=0.0,
-        )
-    avg = sum(nonempty) / len(nonempty)
-    return Row(
-        n_partitions=n_parts,
-        n_empty=n_parts - len(nonempty),
-        min_rows=min(nonempty),
-        max_rows=max(nonempty),
-        avg_rows=avg,
-        skew_ratio=max(nonempty) / avg,
-    )
 
 
 def join_cardinality_profile(

@@ -423,60 +423,6 @@ def extract_features(df: DataFrame, use_real_codec: bool = False) -> DataFrame:
     return df.mapInPandas(run, DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("modality", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("out_width", T.IntegerType()),
-        T.StructField("out_height", T.IntegerType()),
-        T.StructField("resized_md5", T.StringType()),
-    ]
-)
-
-
-def fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: content-and-size-dependent bytes (md5
-    keyed by target dims, tiled to width*height//64). Stands in for the real
-    codec so the pipeline shape — batch in, payload-transforming batch out —
-    is exercised end to end."""
-    digest = hashlib.md5((payload or b"") + f"|{width}x{height}".encode()).digest()
-    out_len = max(16, width * height // 64)
-    return (digest * (out_len // len(digest) + 1))[:out_len]
-
-
-def resize_media(
-    df: DataFrame, width: int = 64, height: int = 64, use_real_codec: bool = False
-) -> DataFrame:
-    """Arrow-batched media resize via mapInPandas (same batch-in/batch-out
-    shape as extract_features). The real decoder slot raises (marked stub —
-    no image libs in this container); the fake path is deterministic, so
-    tests pin content-addressed outputs. At scale, cap Arrow batch bytes via
-    spark.sql.execution.arrow.maxRecordsPerBatch (see module docstring)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [bytes(p) if p is not None else b"" for p in pdf["payload"]]
-            if use_real_codec:
-                for payload, modality, mime in zip(payloads, pdf["modality"], pdf["mime"]):
-                    decode_media(payload, modality, mime)  # PIL-gated; raises without codecs
-            outs = [fake_resize(p, width, height) for p in payloads]
-            n = len(payloads)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "modality": pdf["modality"].to_numpy(),
-                    "payload": outs,
-                    "out_width": np.full(n, width, dtype=np.int32),
-                    "out_height": np.full(n, height, dtype=np.int32),
-                    "resized_md5": [hashlib.md5(o).hexdigest() for o in outs],
-                },
-                columns=[f.name for f in RESIZED_SCHEMA.fields],
-            )
-
-    return df.mapInPandas(run, RESIZED_SCHEMA)
-
-
 def sample_frame_indices(
     df: DataFrame, n_frames_col: str = "meta_n_frames", every: int = 2
 ) -> DataFrame:

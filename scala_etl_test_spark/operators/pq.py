@@ -413,33 +413,3 @@ def ivf_pq_residual_topk(
     return _adc_rank(
         probed, F.element_at(lookup, F.col("cluster_id")), k, id_col
     )
-
-
-def forget_from_pq_codes(
-    spark,
-    codes_path: str,
-    forget_ids: DataFrame,
-    id_col: str = "vec_id",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """Right-to-be-forgotten on a PERSISTED PQ/IVFPQ code table. The code
-    row IS derived personal data — ``codes`` reconstructs the vector to
-    quantization error — so a deletion request must reach it like any
-    other artifact. An IVFPQ code table written ``partitionBy(cluster_id)``
-    (``pq_encode``'s ``keep_cols`` routing) gets the same CELL-LOCAL
-    rewrite as the raw IVF corpus: only cells containing a doomed id are
-    rewritten, others stay byte-identical
-    (:func:`~scala_etl_test_spark.operators.similarity.forget_from_ivf`
-    is the shared implementation — a code table is just a narrower corpus).
-
-    Codebooks are NOT rewritten: a codebook is k·256 aggregate centroids
-    over (at training time) millions of subvectors — model parameters in
-    the aggregate-statistics sense, not records; whether to periodically
-    retrain codebooks after erasure is a policy knob, while the per-row
-    codes (the reconstructable data) are what this function removes.
-    Returns the same (cluster, rows_erased, rows_after) evidence frame."""
-    from scala_etl_test_spark.operators.similarity import forget_from_ivf
-
-    return forget_from_ivf(
-        spark, codes_path, forget_ids, id_col=id_col, cluster_col=cluster_col
-    )

@@ -19,7 +19,7 @@ skew at runtime, but two cases still need explicit help on a 100 TB corpus:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def with_salt(df: DataFrame, salt: int, cols: list[str] | None = None) -> DataFrame:
@@ -59,53 +59,6 @@ def salted_join(
     p = with_salt(probe, salt)
     b = replicate_by_salt(build, salt)
     return p.join(b, on=on + ["_salt"], how=how).drop("_salt")
-
-
-def hot_keys(df: DataFrame, on: list[str], threshold: int) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` — the heavy hitters worth
-    salting. Exact one-pass count; on a petabyte probe side, swap in a
-    sampled count (``df.sample(0.01)`` with threshold/100) — detection only
-    needs to find keys orders of magnitude above the mean."""
-    return (
-        df.groupBy(*on)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > threshold)
-        .select(*on)
-    )
-
-
-def adaptive_salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: list[str],
-    salt: int = 16,
-    hot_threshold: int = 100_000,
-    how: str = "inner",
-) -> DataFrame:
-    """Salt ONLY the heavy-hitter keys; the cold majority joins plainly.
-
-    Blanket salting replicates the whole build side ``salt``× — wasteful
-    when skew lives in a handful of keys. This form splits both sides on the
-    (broadcast) hot-key set: hot probe rows join the salted hot build slice,
-    cold rows pay nothing extra. Row-identical to the plain join for
-    inner/left (pinned by tests).
-
-    Detection costs one aggregation over the probe side; amortize it by
-    persisting/reusing the hot-key set when the key distribution is stable
-    across runs (it usually is — boilerplate fingerprints, 'und' language).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"adaptive_salted_join supports inner/left, got {how!r}")
-    hot = F.broadcast(hot_keys(probe, on, hot_threshold))
-    probe_hot = probe.join(hot, on=on, how="left_semi")
-    probe_cold = probe.join(hot, on=on, how="left_anti")
-    build_hot = build.join(hot, on=on, how="left_semi")
-    # cold probe keys can never match hot build rows, so the cold side only
-    # needs the non-hot build slice — no wasted shuffle of hot build rows
-    build_cold = build.join(hot, on=on, how="left_anti")
-    hot_joined = salted_join(probe_hot, build_hot, on=on, salt=salt, how=how)
-    cold_joined = probe_cold.join(build_cold, on=on, how=how)
-    return hot_joined.unionByName(cold_joined)
 
 
 def salted_distinct_count(

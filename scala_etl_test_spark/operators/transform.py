@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from scala_etl_test_spark.functions.cleaning import fix_hour_24, strip_non_ascii
+
 
 def positional_union(*dfs: DataFrame) -> DataFrame:
     """UNION ALL by column position, duplicates kept (ApplaudoETL.scala:157).
@@ -74,16 +76,11 @@ def clean_orders(df: DataFrame) -> DataFrame:
     - ``order_hour_of_day == 24 → 0`` (blob data dirtiness, ``:166-167``).
     """
     return (
-        df.withColumn("product", F.regexp_replace(F.col("product"), r"[^\x00-\x7F]", ""))
+        df.withColumn("product", strip_non_ascii("product"))
         .withColumn(
             "days_since_prior_order", F.col("days_since_prior_order").cast("int")
         )
-        .withColumn(
-            "order_hour_of_day",
-            F.when(F.col("order_hour_of_day") == 24, 0).otherwise(
-                F.col("order_hour_of_day")
-            ),
-        )
+        .withColumn("order_hour_of_day", fix_hour_24("order_hour_of_day"))
     )
 
 

@@ -9,7 +9,7 @@ driver's local testdata substitutes cleanly for cloud sources.
 from scala_etl_test_spark.sources.csv_source import list_files_above_watermark, read_orders_csv
 from scala_etl_test_spark.sources.jdbc_source import jdbc_watermark_query, read_orders_jdbc
 from scala_etl_test_spark.sources.api_source import fetch_product_details, read_product_details_api
-from scala_etl_test_spark.sources.parquet_source import load_tables, read_table
+from scala_etl_test_spark.sources.parquet_source import read_table
 from scala_etl_test_spark.sources.sinks import store_parquet, show_console
 
 __all__ = [
@@ -19,7 +19,6 @@ __all__ = [
     "read_orders_jdbc",
     "fetch_product_details",
     "read_product_details_api",
-    "load_tables",
     "read_table",
     "store_parquet",
     "show_console",

@@ -19,7 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -38,11 +38,3 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def co_located_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two tables bucketed on ``on`` — plans as a zero-Exchange
-    sort-merge join when bucket specs line up."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)

@@ -58,9 +58,3 @@ def read_orders_jdbc(
     for k, v in (partition_options or {}).items():
         reader = reader.option(k, v)
     return cast_to_schema(reader.load(), schema)
-
-
-def coerce_all_string_frame(df: DataFrame, schema: T.StructType = PRODUCT_SCHEMA) -> DataFrame:
-    """Standalone S4 coercion fold for an all-string frame (the shape the
-    MSSQL driver produced in the reference, ipynb cell 8)."""
-    return cast_to_schema(df, schema)

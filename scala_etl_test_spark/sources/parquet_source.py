@@ -4,19 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 # (sf_dir, name, freshness) -> inferred StructType. Every bare
 # ``spark.read.parquet`` runs a one-task footer/schema-inference JOB before
@@ -89,10 +76,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(ts_type, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in (names or TPCH_TABLES)}
 
 
 def footer_row_count(sf_dir: str, name: str) -> int:

@@ -89,63 +89,3 @@ def write_compacted(
         out = out.sortWithinPartitions(*sort_by)
     out.write.mode(mode).parquet(path)
     return n_files
-
-
-def bigquery_options(
-    table: str,
-    project: str | None = None,
-    temporary_gcs_bucket: str | None = None,
-    write_method: str = "indirect",
-) -> dict[str, str]:
-    """Option dict for the spark-bigquery connector (SURVEY §2.1 S9 —
-    the reference's notebook-only aspirational sink,
-    ``ApplaudoETL.ipynb`` cell 24). Pure and unit-testable: the
-    ``indirect`` method stages via a GCS bucket (required by the
-    connector), ``direct`` uses the BigQuery Storage Write API and
-    needs no bucket."""
-    if write_method not in ("indirect", "direct"):
-        raise ValueError(f"write_method must be direct|indirect, got {write_method!r}")
-    if write_method == "indirect" and not temporary_gcs_bucket:
-        raise ValueError("indirect BigQuery writes require temporary_gcs_bucket")
-    opts = {"table": table, "writeMethod": write_method}
-    if project:
-        opts["parentProject"] = project
-    if temporary_gcs_bucket:
-        opts["temporaryGcsBucket"] = temporary_gcs_bucket
-    return opts
-
-
-def write_bigquery(
-    df: DataFrame,
-    table: str,
-    project: str | None = None,
-    temporary_gcs_bucket: str | None = None,
-    mode: str = "overwrite",
-    write_method: str = "indirect",
-) -> None:
-    """BigQuery sink passthrough — completes the reference's sink surface
-    (S9). CONNECTOR-GATED: the spark-bigquery-with-dependencies jar is not
-    bundled here (cloud connector, not part of a local engine); without it
-    on the classpath the save fails and this wrapper re-raises with the
-    exact --packages coordinate to add. Everything up to the jar boundary
-    (format, option plumbing, mode) is real and unit-tested."""
-    opts = bigquery_options(table, project, temporary_gcs_bucket, write_method)
-    writer = df.write.format("bigquery").mode(mode).options(**opts)
-    try:
-        writer.save()
-    except Exception as exc:  # connector absent in this environment
-        # Only the missing-data-source signatures get the --packages hint
-        # (ADVICE r4): with the connector INSTALLED, auth/table/schema
-        # failures also mention "bigquery" and must surface unchanged.
-        msg = str(exc)
-        missing_source = (
-            "DATA_SOURCE_NOT_FOUND" in msg
-            or "Failed to find data source: bigquery" in msg
-            or ("ClassNotFoundException" in msg and "bigquery" in msg.lower())
-        )
-        if missing_source:
-            raise RuntimeError(
-                "BigQuery connector not on the classpath; launch with "
-                "--packages com.google.cloud.spark:spark-bigquery-with-dependencies_2.13:0.41.0"
-            ) from exc
-        raise

@@ -82,18 +82,6 @@ def _corpus_dir(index_dir: str) -> str:
     return str(pathlib.Path(index_dir) / "corpus")
 
 
-def _marker(index_dir: str, batch_id: int) -> pathlib.Path:
-    return marker_path(index_dir, batch_id)
-
-
-def _marker_ids(index_dir: str) -> list[int]:
-    return marker_ids(index_dir)
-
-
-def _compaction_watermark(index_dir: str) -> int | None:
-    return compaction_watermark(index_dir)
-
-
 def _committed_filter(index_dir: str):
     """(filter Column | None) selecting committed corpus rows — None when
     nothing has ever committed. The serve path applies this so an
@@ -101,8 +89,8 @@ def _committed_filter(index_dir: str):
     landed) can never surface phantom vectors in probe results — the
     moments-store lesson (streaming/moments.py) applied to the vector
     artifact."""
-    markers = _marker_ids(index_dir)
-    wm = _compaction_watermark(index_dir)
+    markers = marker_ids(index_dir)
+    wm = compaction_watermark(index_dir)
     if wm is None and not markers:
         return None
     cond = F.col("batch_id").isin([int(b) for b in markers])
@@ -135,7 +123,7 @@ def init_ivf_index(
         .write.partitionBy("cluster_id", "batch_id")
         .parquet(_corpus_dir(index_dir))
     )
-    _marker(index_dir, -1).mkdir(parents=True, exist_ok=True)
+    marker_path(index_dir, -1).mkdir(parents=True, exist_ok=True)
 
 
 def _route_by_cell(assigned: DataFrame, n_cells: int) -> DataFrame:
@@ -216,10 +204,10 @@ def append_batch_to_ivf(
     append under the batch's delta dirs. Returns False (no-op) when the
     batch's marker says it already committed — the replay guard. Public
     (not a closure) so replay/crash paths are directly testable."""
-    marker = _marker(index_dir, batch_id)
+    marker = marker_path(index_dir, batch_id)
     if marker.exists():
         return False
-    wm = _compaction_watermark(index_dir)
+    wm = compaction_watermark(index_dir)
     if wm is not None and batch_id <= wm:
         # compaction collapsed this batch's marker into the watermark; a
         # replay must stay a no-op or it would re-append merged vectors
@@ -349,8 +337,8 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> int | None:
     corpus = pathlib.Path(_corpus_dir(index_dir))
     if not corpus.is_dir():
         return None
-    markers = set(_marker_ids(index_dir))
-    wm = _compaction_watermark(index_dir)
+    markers = set(marker_ids(index_dir))
+    wm = compaction_watermark(index_dir)
     on_disk = {
         int(p.name.split("=", 1)[1])
         for p in corpus.glob("cluster_id=*/batch_id=*")
@@ -424,8 +412,8 @@ def _compact_ivf_cells_locked(
     # (the serve path runs the same sweep — streaming/compaction.py)
     _finish_pending_cell_swaps_unlocked(corpus)
 
-    markers = set(_marker_ids(index_dir))
-    wm = _compaction_watermark(index_dir)
+    markers = set(marker_ids(index_dir))
+    wm = compaction_watermark(index_dir)
 
     def _committed(b: int) -> bool:
         return b in markers or (wm is not None and b <= wm)

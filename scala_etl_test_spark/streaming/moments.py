@@ -109,26 +109,14 @@ def _heal(moments_dir: str) -> None:
             heal_interrupted_swap(*_swap_paths(moments_dir))
 
 
-def _marker(moments_dir: str, batch_id: int) -> pathlib.Path:
-    return marker_path(moments_dir, batch_id)
-
-
-def _marker_ids(moments_dir: str) -> list[int]:
-    return marker_ids(moments_dir)
-
-
-def _compaction_watermark(moments_dir: str) -> int | None:
-    return compaction_watermark(moments_dir)
-
-
 def _committed_filter(moments_dir: str):
     """(filter Column | None) selecting committed partial rows — None when
     NOTHING has ever committed (serve returns None then). The watermark
     adopts only STREAM batches (0..wm): erasure batches live at negative
     ids (:func:`forget_from_moments`) and are committed by marker alone,
     so an orphaned crashed erasure can never be adopted as committed."""
-    markers = _marker_ids(moments_dir)
-    wm = _compaction_watermark(moments_dir)
+    markers = marker_ids(moments_dir)
+    wm = compaction_watermark(moments_dir)
     if wm is None and not markers:
         return None
     cond = F.col("batch_id").isin([int(b) for b in markers])
@@ -194,10 +182,10 @@ def append_batch_moments(
     batch already committed — marker present OR at/below the compaction
     watermark (whose collapse of old markers must not reopen them). Public
     so replay/crash paths are directly testable."""
-    marker = _marker(moments_dir, batch_id)
+    marker = marker_path(moments_dir, batch_id)
     if marker.exists():
         return False
-    wm = _compaction_watermark(moments_dir)
+    wm = compaction_watermark(moments_dir)
     if wm is not None and 0 <= batch_id <= wm:
         return False
     _append_partials(batch_moment_partials(batch, vec_col, scale), moments_dir, batch_id)
@@ -219,7 +207,7 @@ def _append_partials(partials: DataFrame, moments_dir: str, batch_id: int) -> No
         .partitionBy("batch_id")
         .parquet(_partials_dir(moments_dir))
     )
-    _marker(moments_dir, batch_id).mkdir(parents=True, exist_ok=True)
+    marker_path(moments_dir, batch_id).mkdir(parents=True, exist_ok=True)
 
 
 def forget_from_moments(
@@ -259,11 +247,11 @@ def forget_from_moments(
     the store (the corpus rows being erased). Forgetting more rows than
     were ever streamed drives ``n`` ≤ 0 and serving fails loud.
     """
-    committed_neg = [b for b in _marker_ids(moments_dir) if b < 0]
+    committed_neg = [b for b in marker_ids(moments_dir) if b < 0]
     if erasure_id is None:
         erasure_id = max([-(b + 1) for b in committed_neg], default=-1) + 1
     batch_id = -(int(erasure_id) + 1)
-    if _marker(moments_dir, batch_id).exists():
+    if marker_path(moments_dir, batch_id).exists():
         return None
     partials = batch_moment_partials(forgotten, vec_col, scale)
     negated = partials.select(
@@ -422,8 +410,8 @@ def _compact_moments_locked(spark: SparkSession, moments_dir: str) -> int | None
     heal_interrupted_swap(*_swap_paths(moments_dir))
     if not pdir.is_dir():
         return None
-    markers = set(_marker_ids(moments_dir))
-    wm = _compaction_watermark(moments_dir)
+    markers = set(marker_ids(moments_dir))
+    wm = compaction_watermark(moments_dir)
     on_disk = {
         int(p.name.split("=", 1)[1]) for p in pdir.glob("batch_id=*") if p.is_dir()
     }

@@ -104,103 +104,3 @@ def streaming_heavy_hitters(
         est = 0 if sketch is None else sketch.estimateCount(jvm.java.lang.Long(int(key)))
         out.append((int(key), int(est), int(total)))
     return spark.createDataFrame(out, "key long, estimate long, stream_total long")
-
-
-# ---------------------------------------------------------------------------
-# Continuous quantiles: mergeable histogram partials over a stream
-# ---------------------------------------------------------------------------
-
-def _hist_bin(v, lo: float, hi: float, nbins: int):
-    """Clamped equi-width bin over a DECLARED [lo, hi] domain — streams
-    cannot know a global min/max up front, so the domain is part of the
-    sketch's configuration (values outside it land in the edge bins).
-    With lo/hi equal to the data's true bounds this is bin-identical to
-    the batch operator's data-derived binning."""
-    if hi == lo:
-        return F.lit(0)
-    width = (hi - lo) / float(nbins)
-    return F.least(
-        F.greatest(F.floor((v - F.lit(lo)) / F.lit(width)).cast("int"), F.lit(0)),
-        F.lit(nbins - 1),
-    )
-
-
-def stream_absorb_histogram(
-    stream_df: DataFrame,
-    value_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    lo: float,
-    hi: float,
-    nbins: int = 64,
-) -> None:
-    """Drain the stream (AvailableNow), reducing each micro-batch to its
-    equi-width histogram PARTIAL (≤ nbins rows of (bin, c)), written
-    idempotently per batch — the streaming twin of
-    :func:`operators.sketches.histogram_quantile_merge`'s daily partials.
-    Histograms are linear sketches (bin counts ADD), so merging per-batch
-    partials is exact and order-independent; a replayed batch replaces its
-    own partition instead of double-counting."""
-
-    def absorb(batch_df: DataFrame, batch_id: int) -> None:
-        v = F.col(value_col).cast("double")
-        part = (
-            batch_df.filter(v.isNotNull())
-            .select(_hist_bin(v, lo, hi, nbins).alias("bin"))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        _write_delta(part, state_dir, batch_id, single_file=True)
-
-    q = (
-        stream_df.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_quantiles(
-    spark: SparkSession,
-    state_dir: str,
-    lo: float,
-    hi: float,
-    nbins: int = 64,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
-    """Answer quantiles from the folded stream state: bin-wise SUM of the
-    per-batch partials, then the same rank-in-bin interpolation as the
-    batch operator — (quantile, n, est_value). Estimates carry the same
-    histogram guarantee (|est − exact| ≤ bin_width) relative to the
-    declared domain; the bound itself is checked batch-side by
-    :func:`operators.sketches.histogram_quantile_merge`, which has the
-    exact rank statistics this fold deliberately avoids."""
-    from pyspark.sql import Window
-
-    merged = (
-        spark.read.parquet(state_dir).groupBy("bin").agg(F.sum("c").alias("c"))
-    )
-    w_cum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = merged.select("bin", "c", F.sum("c").over(w_cum).alias("cum"))
-    total = merged.agg(F.sum("c").alias("n"))
-    qs = spark.createDataFrame([(float(q),) for q in quantiles], "quantile double")
-    target = F.ceil(F.col("quantile") * F.col("n")).cast("long")
-    width = (hi - lo) / float(nbins)
-    est = (
-        F.lit(lo)
-        + F.lit(width) * F.col("bin").cast("double")
-        + F.lit(width)
-        * ((target - (F.col("cum") - F.col("c"))).cast("double") / F.col("c").cast("double"))
-    )
-    if hi == lo:
-        est = F.lit(float(lo))
-    return (
-        qs.join(F.broadcast(total))
-        .join(
-            F.broadcast(cum),
-            on=(F.col("cum") >= target) & ((F.col("cum") - F.col("c")) < target),
-        )
-        .select("quantile", F.col("n").cast("long").alias("n"), F.round(est, 6).alias("est_value"))
-        .orderBy("quantile")
-    )

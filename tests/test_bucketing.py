@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from scala_etl_test_spark.sources.bucketing import co_located_join, write_bucketed
+from scala_etl_test_spark.sources.bucketing import write_bucketed
 from scala_etl_test_spark.sources.parquet_source import read_table
 
 from tests.test_plans import plan
@@ -31,7 +31,7 @@ def bucketed_tables(spark, sf_dir, tmp_path):
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = co_located_join(spark, "li_b", "orders_b", on=["k"])
+        joined = spark.table("li_b").join(spark.table("orders_b"), on=["k"])
         p = plan(joined, mode="simple")
         assert "SortMergeJoin" in p, p
         assert "Exchange" not in p, f"bucketed join still shuffles:\n{p}"
@@ -41,6 +41,6 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
 
 def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
     li, orders = bucketed_tables
-    got = {tuple(r) for r in co_located_join(spark, "li_b", "orders_b", on=["k"]).collect()}
+    got = {tuple(r) for r in spark.table("li_b").join(spark.table("orders_b"), on=["k"]).collect()}
     want = {tuple(r) for r in li.join(orders, on=["k"]).collect()}
     assert got == want

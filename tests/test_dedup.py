@@ -337,56 +337,6 @@ def test_zero_overlap_pairs_kept_on_request(spark):
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(0, 1, 0.0)]
 
 
-class TestLshTuning:
-    def test_s_curve_shape(self):
-        from scala_etl_test_spark.operators.dedup import lsh_collision_probability
-
-        # monotone in s; near 0 at low sim, near 1 at high sim for 4x4
-        ps = [lsh_collision_probability(s / 10, 4, 4) for s in range(11)]
-        assert ps == sorted(ps)
-        assert ps[0] == 0.0 and ps[10] == 1.0
-        assert ps[2] < 0.01 and ps[9] > 0.9
-
-    def test_choose_bands_rows_midpoint(self):
-        from scala_etl_test_spark.operators.dedup import (
-            choose_bands_rows,
-            lsh_collision_probability,
-        )
-
-        b, r = choose_bands_rows(16, 0.5)
-        assert b * r == 16
-        # the chosen curve's midpoint is the closest achievable to 0.5
-        mid = (1.0 / b) ** (1.0 / r)
-        for rr in (1, 2, 4, 8, 16):
-            bb = 16 // rr
-            assert abs(mid - 0.5) <= abs((1.0 / bb) ** (1.0 / rr) - 0.5) + 1e-12
-        # and the midpoint really is the ~50% collision point
-        assert abs(lsh_collision_probability(mid, b, r) - 0.63) < 0.15
-
-    def test_threshold_extremes(self):
-        from scala_etl_test_spark.operators.dedup import choose_bands_rows
-
-        # high threshold -> more rows (steeper, fewer false positives)
-        b_hi, r_hi = choose_bands_rows(16, 0.9)
-        b_lo, r_lo = choose_bands_rows(16, 0.1)
-        assert r_hi > r_lo
-
-    def test_validation(self):
-        import pytest as _pytest
-
-        from scala_etl_test_spark.operators.dedup import (
-            choose_bands_rows,
-            lsh_collision_probability,
-        )
-
-        with _pytest.raises(ValueError):
-            choose_bands_rows(0, 0.5)
-        with _pytest.raises(ValueError):
-            choose_bands_rows(16, 1.0)
-        with _pytest.raises(ValueError):
-            lsh_collision_probability(1.5, 4, 4)
-
-
 class TestSortedNeighborhood:
     def test_prefix_sharing_dups_found_distant_prefixes_missed(self, spark):
         from scala_etl_test_spark.operators.dedup import sorted_neighborhood_pairs

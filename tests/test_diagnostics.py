@@ -1,55 +1,7 @@
-"""Partition diagnostics (operators/diagnostics.py): the measurement half
-of skew handling — pinned against the remedies in operators/skew.py."""
+"""Join diagnostics (operators/diagnostics.py): the pre-flight join
+cardinality profile, the measurement half of skew handling."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from scala_etl_test_spark.operators.diagnostics import partition_stats, skew_report
-from scala_etl_test_spark.operators.skew import with_salt
-
-
-def test_partition_stats_sum_to_table_size(spark):
-    df = spark.range(10_000).repartition(8)
-    stats = partition_stats(df).collect()
-    assert sum(r["n_rows"] for r in stats) == 10_000
-    assert len(stats) <= 8
-
-
-def test_skew_report_flags_hot_key_and_salting_fixes_it(spark):
-    """One key holding 90% of rows: hash-partitioning on the key makes one
-    straggler partition (skew_ratio ≈ n_partitions·0.9); salting the key
-    spreads it back near 1. The report must see both."""
-    hot = spark.range(9_000).select(F.lit("HOT").alias("k"), F.col("id"))
-    cold = spark.range(1_000).select(
-        F.concat(F.lit("c"), F.col("id") % 500).alias("k"), F.col("id")
-    )
-    df = hot.unionByName(cold)
-    skewed = df.repartition(16, "k")
-    r_skew = skew_report(skewed)
-    assert r_skew.max_rows >= 9_000  # the HOT partition
-    assert r_skew.skew_ratio > 4
-
-    # fact-side spreading salt hashes the WHOLE row (cols=None): salting on
-    # the key alone would send every HOT row to one salt bucket again
-    salted = with_salt(df, salt=16).repartition(16, "k", "_salt")
-    r_salt = skew_report(salted)
-    assert r_salt.skew_ratio < 3
-    assert r_salt.max_rows < 3_000
-
-
-def test_skew_report_empty_partitions_counted_separately(spark):
-    df = spark.range(4).repartition(16)
-    r = skew_report(df)
-    assert r.n_partitions == 16
-    assert r.n_empty >= 12
-    assert r.skew_ratio >= 1.0
-
-
-def test_skew_report_empty_table(spark):
-    df = spark.range(0).repartition(4)
-    r = skew_report(df)
-    assert r.n_empty == r.n_partitions and r.skew_ratio == 0.0
 
 
 class TestJoinCardinalityProfile:

@@ -54,39 +54,6 @@ def test_frame_sampling_native(media):
     assert [r["frame_index"] for r in image] == [0]
 
 
-def test_resize_media_deterministic_and_shaped(spark):
-    import hashlib
-
-    from scala_etl_test_spark.operators.multimodal import fake_resize, resize_media
-
-    media = spark.createDataFrame(
-        [(1, "image", b"imgbytes", "image/raw"), (2, "image", b"other", "image/raw")],
-        "media_id long, modality string, payload binary, mime string",
-    )
-    out = resize_media(media, width=32, height=32)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert set(rows) == {1, 2}
-    expected = fake_resize(b"imgbytes", 32, 32)
-    assert bytes(rows[1]["payload"]) == expected
-    assert rows[1]["resized_md5"] == hashlib.md5(expected).hexdigest()
-    assert rows[1]["out_width"] == rows[1]["out_height"] == 32
-    # content-addressed: different inputs -> different resized payloads
-    assert rows[1]["resized_md5"] != rows[2]["resized_md5"]
-
-
-def test_resize_real_codec_is_marked_stub(spark):
-    import pytest
-
-    from scala_etl_test_spark.operators.multimodal import resize_media
-
-    media = spark.createDataFrame(
-        [(1, "image", b"x", "image/raw")],
-        "media_id long, modality string, payload binary, mime string",
-    )
-    with pytest.raises(Exception, match="codecs unavailable|NotImplementedError"):
-        resize_media(media, use_real_codec=True).collect()
-
-
 def _png(width, height, color_type=6, bit_depth=8, interlace=0):
     """Build a REAL (spec-valid, zlib-deflated, CRC'd) non-interlaced PNG
     with stdlib only — what PIL would write for small RGB/RGBA/gray images.

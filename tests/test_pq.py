@@ -218,15 +218,20 @@ def test_residual_topk_dim_mismatch_raises(emb, codebook):
 
 
 def test_forget_from_pq_codes_cell_local_and_probe_clean(emb, codebook, tmp_path):
-    """Erasure reaches the PQ artifact (operators/pq.py:forget_from_pq_codes):
-    doomed code rows leave the partitioned table via a cell-local rewrite
-    (untouched cells byte-identical), an IVFADC probe over the erased table
-    never returns a forgotten id, and the codebook file-set is untouched by
-    construction (it is not stored in the code table at all)."""
+    """Erasure reaches the PQ artifact: a code table written
+    ``partitionBy(cluster_id)`` is a narrower IVF corpus, so
+    ``similarity.forget_from_ivf`` erases from it directly. Doomed code rows
+    leave the partitioned table via a cell-local rewrite (untouched cells
+    byte-identical), an IVFADC probe over the erased table never returns a
+    forgotten id, and the codebook file-set is untouched by construction
+    (it is not stored in the code table at all)."""
     import os
 
-    from scala_etl_test_spark.operators.pq import forget_from_pq_codes
-    from scala_etl_test_spark.operators.similarity import ivf_assign, stride_centroids
+    from scala_etl_test_spark.operators.similarity import (
+        forget_from_ivf,
+        ivf_assign,
+        stride_centroids,
+    )
 
     spark = emb.sparkSession
     cent = stride_centroids(emb, 8)
@@ -252,7 +257,7 @@ def test_forget_from_pq_codes_cell_local_and_probe_clean(emb, codebook, tmp_path
         for r in live.filter(F.col("cluster_id") == 1).select("vec_id").orderBy("vec_id").limit(2).collect()
     ]
     doomed = spark.createDataFrame([(i,) for i in doomed_ids], "vec_id long")
-    stats = {r["cluster_id"]: r for r in forget_from_pq_codes(spark, path, doomed).collect()}
+    stats = {r["cluster_id"]: r for r in forget_from_ivf(spark, path, doomed).collect()}
     assert set(stats) == {1} and stats[1]["rows_erased"] == 2
 
     after = cell_files()

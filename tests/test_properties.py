@@ -12,7 +12,7 @@ import random
 
 from hypothesis import given, settings, strategies as st
 
-from scala_etl_test_spark.operators.multimodal import byte_histogram_features, fake_resize
+from scala_etl_test_spark.operators.multimodal import byte_histogram_features
 
 
 @given(st.binary(min_size=0, max_size=2048), st.sampled_from([4, 16, 64, 256]))
@@ -30,14 +30,6 @@ def test_byte_histogram_is_a_normalized_histogram(payload, bins):
         assert feats == [c / len(payload) for c in ref]
     else:
         assert feats == [0.0] * bins
-
-
-@given(st.binary(max_size=512), st.integers(8, 128), st.integers(8, 128))
-@settings(max_examples=100, deadline=None)
-def test_fake_resize_deterministic_and_sized(payload, w, h):
-    out = fake_resize(payload, w, h)
-    assert out == fake_resize(payload, w, h)
-    assert len(out) == max(16, w * h // 64)
 
 
 def _union_find_components(n_nodes, edges):

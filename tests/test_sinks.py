@@ -54,28 +54,14 @@ def test_write_table_passthrough_roundtrip(spark, sf_dir, tmp_path):
     assert spark.read.json(out).count() == 2 * nation.count()
 
 
-def test_zorder_key_interleaves_and_clusters(spark):
-    from scala_etl_test_spark.functions.cleaning import zorder_key
-
-    df = spark.createDataFrame([(x, y) for x in range(8) for y in range(8)], "x int, y int")
-    rows = df.select("x", "y", zorder_key(["x", "y"], bits=3).alias("z")).collect()
-    z = {(r["x"], r["y"]): r["z"] for r in rows}
-    # known Morton values: (0,0)=0 (1,0)=1 (0,1)=2 (1,1)=3 (2,2)=12 (7,7)=63
-    assert z[(0, 0)] == 0 and z[(1, 0)] == 1 and z[(0, 1)] == 2
-    assert z[(1, 1)] == 3 and z[(2, 2)] == 12 and z[(7, 7)] == 63
-    assert len(set(z.values())) == 64  # bijective on the grid
-
-
 def test_zorder_sorted_write_prunes_both_dims(spark, tmp_path):
     """Sorting by the z-key bounds BOTH dimensions per file; a plain x-sort
     leaves y unconstrained (full range in every file)."""
-    from pyspark.sql import functions as F
-
-    from scala_etl_test_spark.functions.cleaning import zorder_key
+    from scala_etl_test_spark.operators.layout import z_value
 
     df = spark.createDataFrame(
         [(x, y) for x in range(64) for y in range(64)], "x int, y int"
-    ).withColumn("z", zorder_key(["x", "y"], bits=6))
+    ).withColumn("z", z_value([F.col("x"), F.col("y")], bits=6))
     out = str(tmp_path / "zorder")
     df.repartitionByRange(4, "z").sortWithinPartitions("z").write.parquet(out)
     spans = (
@@ -118,68 +104,3 @@ def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
         if not d.endswith("l_returnflag=R"):
             shutil.rmtree(d)
     assert back.count() == exact
-
-
-class TestBigQuerySink:
-    def test_options_shape(self):
-        from scala_etl_test_spark.sources.sinks import bigquery_options
-
-        opts = bigquery_options(
-            "ds.clients", project="p1", temporary_gcs_bucket="tmp-bkt"
-        )
-        assert opts == {
-            "table": "ds.clients",
-            "writeMethod": "indirect",
-            "parentProject": "p1",
-            "temporaryGcsBucket": "tmp-bkt",
-        }
-        direct = bigquery_options("ds.t", write_method="direct")
-        assert direct == {"table": "ds.t", "writeMethod": "direct"}
-
-    def test_indirect_requires_bucket_and_method_validated(self):
-        import pytest as _pytest
-
-        from scala_etl_test_spark.sources.sinks import bigquery_options
-
-        with _pytest.raises(ValueError, match="temporary_gcs_bucket"):
-            bigquery_options("ds.t")
-        with _pytest.raises(ValueError, match="direct|indirect"):
-            bigquery_options("ds.t", write_method="streaming")
-
-    def test_write_raises_actionable_error_without_connector(self, spark):
-        import pytest as _pytest
-
-        from scala_etl_test_spark.sources.sinks import write_bigquery
-
-        df = spark.range(3)
-        with _pytest.raises(RuntimeError, match="--packages com.google.cloud.spark"):
-            write_bigquery(df, "ds.t", write_method="direct")
-
-    def test_write_does_not_mask_real_bigquery_failures(self, spark, monkeypatch):
-        # ADVICE r4: auth/table/schema errors mention "bigquery" too — only
-        # missing-data-source signatures may be rewritten to the jar hint.
-        import pytest as _pytest
-
-        from scala_etl_test_spark.sources import sinks
-
-        class _FailingWriter:
-            def format(self, *_):
-                return self
-
-            def mode(self, *_):
-                return self
-
-            def options(self, **_):
-                return self
-
-            def save(self):
-                raise RuntimeError(
-                    "Access Denied: BigQuery table ds.t: permission bigquery.tables.updateData denied"
-                )
-
-        df = spark.range(1)
-        monkeypatch.setattr(
-            type(df), "write", property(lambda self: _FailingWriter())
-        )
-        with _pytest.raises(RuntimeError, match="Access Denied"):
-            sinks.write_bigquery(df, "ds.t", write_method="direct")

@@ -4,13 +4,9 @@ keys (structural checks on the plan + salt distribution)."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from scala_etl_test_spark.operators.skew import (
-    adaptive_salted_join,
-    hot_keys,
     replicate_by_salt,
     salted_distinct_count,
     salted_join,
@@ -58,31 +54,6 @@ def test_replicate_by_salt_exact_fanout(spark):
     rep = replicate_by_salt(df, 5)
     assert rep.count() == 10
     assert rep.groupBy("k").count().filter(F.col("count") != 5).count() == 0
-
-
-@pytest.fixture()
-def skewed_frames(spark):
-    # key 7 is hot (200 rows), keys 0-9 are cold (5 each); key 99 unmatched
-    probe_rows = [(7, i) for i in range(200)] + [
-        (k, i) for k in range(10) for i in range(5)
-    ] + [(99, 0)]
-    probe = spark.createDataFrame(probe_rows, "k int, pv int")
-    build = spark.createDataFrame([(k, f"b{k}") for k in range(10)], "k int, bv string")
-    return probe, build
-
-
-def test_hot_key_detection(spark, skewed_frames):
-    probe, _ = skewed_frames
-    assert [r["k"] for r in hot_keys(probe, ["k"], 100).collect()] == [7]
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_adaptive_salted_join_row_identical(spark, skewed_frames, how):
-    probe, build = skewed_frames
-    got = adaptive_salted_join(probe, build, on=["k"], salt=4, hot_threshold=100, how=how)
-    want = probe.join(build, on=["k"], how=how)
-    assert sorted(got.columns) == sorted(want.columns)
-    assert _sets(got.select(*want.columns)) == _sets(want)
 
 
 def test_salted_distinct_count_exact(spark, sf_dir):

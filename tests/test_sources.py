@@ -4,10 +4,10 @@ import json
 
 from pyspark.sql import functions as F
 
-from scala_etl_test_spark.schemas import PRODUCT_SCHEMA
+from scala_etl_test_spark.schemas import PRODUCT_SCHEMA, cast_to_schema
 from scala_etl_test_spark.sources.api_source import read_product_details_api
 from scala_etl_test_spark.sources.csv_source import list_files_above_watermark, read_orders_csv
-from scala_etl_test_spark.sources.jdbc_source import coerce_all_string_frame, jdbc_watermark_query
+from scala_etl_test_spark.sources.jdbc_source import jdbc_watermark_query
 
 from tests.fixtures import orders_rows, product_details_rows, write_csv_files
 
@@ -45,7 +45,7 @@ def test_jdbc_subquery_form():
 def test_all_string_coercion(spark):
     rows = [tuple(str(v) for v in r) for r in orders_rows()]
     df = spark.createDataFrame(rows, PRODUCT_SCHEMA.fieldNames())
-    out = coerce_all_string_frame(df)
+    out = cast_to_schema(df, PRODUCT_SCHEMA)
     assert out.schema == PRODUCT_SCHEMA
     assert out.count() == len(rows)
     assert out.filter(F.col("order_id").isNull()).count() == 0

@@ -154,30 +154,6 @@ def test_session_window_batch_matches_lag_formulation(spark, sf_dir):
     assert got == want
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir, events_dir, tmp_path):
-    """Watermarked stream-stream interval join == the same join in batch."""
-    from scala_etl_test_spark.streaming.joins import clicks_with_recent_purchase
-
-    sev = stream_events_parquet(spark, events_dir)
-    sdf = clicks_with_recent_purchase(
-        sev.filter(F.col("event_type") == "click"),
-        sev.filter(F.col("event_type") == "purchase"),
-    )
-    run_available_now(sdf, str(tmp_path / "ckpt"), query_name="ss_join")
-    got = _rows(spark, "ss_join")
-
-    bev = read_table(spark, sf_dir, "events")
-    want = {
-        tuple(r)
-        for r in clicks_with_recent_purchase(
-            bev.filter(F.col("event_type") == "click"),
-            bev.filter(F.col("event_type") == "purchase"),
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0  # the fixture actually exercises matches
-
-
 def test_stateful_sessions_match_batch(spark, sf_dir, events_dir, tmp_path):
     """applyInPandasWithState running totals on a drained stream == batch."""
     sdf = stateful_user_sessions(stream_events_parquet(spark, events_dir))
@@ -187,30 +163,6 @@ def test_stateful_sessions_match_batch(spark, sf_dir, events_dir, tmp_path):
     got = _rows(spark, "stateful_sessions")
     want = {tuple(r) for r in q_events_sessionize(spark, sf_dir).collect()}
     assert got == want
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_dir, tmp_path):
-    """Stream-static broadcast enrichment == the same join in batch; no
-    watermark/state needed on either side."""
-    from scala_etl_test_spark.streaming.joins import enrich_with_dimension
-
-    bev = read_table(spark, sf_dir, "events")
-    dim = (
-        bev.groupBy("user_id")
-        .agg(F.min("ts").alias("first_seen"))
-        .withColumn("tier", (F.col("user_id") % 3).cast("int"))
-        .select("user_id", "tier")
-    )
-    sdf = enrich_with_dimension(
-        stream_events_parquet(spark, events_dir).select("event_id", "user_id"), dim, on="user_id"
-    )
-    run_available_now(sdf, str(tmp_path / "ckpt"), query_name="enrich")
-    got = _rows(spark, "enrich")
-    want = {
-        tuple(r)
-        for r in enrich_with_dimension(bev.select("event_id", "user_id"), dim, on="user_id").collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_stream_pii_and_text_stats_match_batch(spark, sf_dir, tmp_path):
@@ -751,46 +703,6 @@ def test_streaming_cdc_equal_version_duplicates_collapse_once(spark, sf_dir, tmp
     assert {tuple(r) for r in cdc.read_state(spark, table).collect()} == want
 
 
-def test_stream_histogram_quantiles_match_batch_operator(spark, sf_dir, tmp_path):
-    """Histograms are linear sketches: the folded per-batch partials must
-    answer the SAME quantile estimates as the batch operator when the
-    declared domain equals the data's true bounds — exact est parity."""
-    from scala_etl_test_spark.operators.sketches import histogram_quantile_merge
-    from scala_etl_test_spark.streaming.sketches import (
-        stream_absorb_histogram,
-        streaming_quantiles,
-    )
-
-    ev = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    lo, hi = ev.agg(F.min("value"), F.max("value")).first()
-    src = tmp_path / "hist_src"
-    for k in range(3):
-        ev.filter(F.col("event_id") % 3 == k).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-    sdf = (
-        spark.readStream.schema(spark.read.parquet(str(src)).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    state = str(tmp_path / "hist_state")
-    stream_absorb_histogram(
-        sdf, "value", state, str(tmp_path / "hist_ckpt"), lo=lo, hi=hi, nbins=32
-    )
-    assert spark.read.parquet(state).select("batch_id").distinct().count() >= 3
-    got = {
-        r["quantile"]: (r["n"], r["est_value"])
-        for r in streaming_quantiles(spark, state, lo=lo, hi=hi, nbins=32).collect()
-    }
-    want = {
-        r["quantile"]: (r["n"], r["est_value"])
-        for r in histogram_quantile_merge(
-            ev, "value", F.to_date("ts"), quantiles=(0.5, 0.9, 0.99), nbins=32
-        ).collect()
-    }
-    assert got == want
-
-
 def test_cdc_bucketed_state_side_has_no_exchange(spark, tmp_path):
     """VERDICT r7 item 5: when state is maintained bucketed with
     n_buckets == shuffle.partitions, the per-batch anti-join reads the
@@ -1246,7 +1158,8 @@ class TestStreamAppendIvf:
 
     def test_replay_is_exactly_once(self, spark, index):
         from scala_etl_test_spark.streaming import append_batch_to_ivf
-        from scala_etl_test_spark.streaming.ann import _corpus_dir, _marker, read_ivf_corpus
+        from scala_etl_test_spark.streaming.ann import _corpus_dir, read_ivf_corpus
+        from scala_etl_test_spark.streaming.compaction import marker_path
 
         d, emb = index
         n = emb.count()
@@ -1260,7 +1173,7 @@ class TestStreamAppendIvf:
         # wipes the partial remnants and re-appends exactly once
         import shutil as _sh
 
-        _sh.rmtree(_marker(d, 7))
+        _sh.rmtree(marker_path(d, 7))
         assert append_batch_to_ivf(spark, d, batch, 7) is True
         assert read_ivf_corpus(spark, d).count() == 2 * n
         got = read_ivf_corpus(spark, d).groupBy("vec_id").count().filter(F.col("count") > 1).count()
@@ -1390,7 +1303,8 @@ class TestStreamAppendIvf:
             forget_from_ivf_index,
             stream_append_ivf,
         )
-        from scala_etl_test_spark.streaming.ann import _marker, read_ivf_corpus
+        from scala_etl_test_spark.streaming.ann import read_ivf_corpus
+        from scala_etl_test_spark.streaming.compaction import marker_path
 
         d, emb = index
         n = emb.count()
@@ -1421,10 +1335,10 @@ class TestStreamAppendIvf:
         assert "batch_id" in left.columns  # delta spine preserved
         # marker still present ⇒ a direct replay of the erased batch is
         # skipped — forgotten vectors cannot resurrect
-        assert _marker(d, 0).exists() or _marker(d, 1).exists()
+        assert marker_path(d, 0).exists() or marker_path(d, 1).exists()
         replay = self._shifted(emb, 1, max_id)
         for b in (0, 1):
-            if _marker(d, b).exists():
+            if marker_path(d, b).exists():
                 assert append_batch_to_ivf(spark, d, replay, b) is False
         assert read_ivf_corpus(spark, d).filter(F.col("vec_id").isin(doomed_ids)).count() == 0
 
@@ -1782,7 +1696,8 @@ class TestMomentsCompaction:
         import pathlib
 
         from scala_etl_test_spark.streaming import append_batch_moments, compact_moments
-        from scala_etl_test_spark.streaming.moments import _marker_ids, _partials_dir
+        from scala_etl_test_spark.streaming.compaction import marker_ids
+        from scala_etl_test_spark.streaming.moments import _partials_dir
 
         emb = self._emb(spark, sf_dir)
         mdir = str(tmp_path / "moments")
@@ -1795,7 +1710,7 @@ class TestMomentsCompaction:
             p.name for p in pathlib.Path(_partials_dir(mdir)).glob("batch_id=*")
         )
         assert dirs == ["batch_id=2"]  # spine collapsed
-        assert _marker_ids(mdir) == []  # markers collapsed into watermark
+        assert marker_ids(mdir) == []  # markers collapsed into watermark
 
     def test_replay_after_compaction_is_noop(self, spark, sf_dir, tmp_path):
         from scala_etl_test_spark.streaming import append_batch_moments, compact_moments
@@ -1960,8 +1875,8 @@ class TestMomentsCompaction:
         import pathlib
 
         from scala_etl_test_spark.operators.similarity import embedding_covariance
+        from scala_etl_test_spark.streaming.compaction import marker_path
         from scala_etl_test_spark.streaming.moments import (
-            _marker,
             _partials_dir,
             batch_moment_partials,
         )
@@ -1975,7 +1890,7 @@ class TestMomentsCompaction:
             .partitionBy("batch_id")
             .parquet(_partials_dir(mdir))
         )
-        _marker(mdir, 2).mkdir(parents=True, exist_ok=True)
+        marker_path(mdir, 2).mkdir(parents=True, exist_ok=True)
         want = {
             (r["dim_i"], r["dim_j"]): r["cov"]
             for r in embedding_covariance(emb).collect()
@@ -2132,7 +2047,8 @@ class TestIvfIndexCompaction:
         import pathlib as _pl
 
         from scala_etl_test_spark.streaming import compact_ivf_index
-        from scala_etl_test_spark.streaming.ann import _corpus_dir, _marker_ids
+        from scala_etl_test_spark.streaming.ann import _corpus_dir
+        from scala_etl_test_spark.streaming.compaction import marker_ids
 
         d, emb, _ = index
         before = self._probe(spark, d, emb)
@@ -2143,7 +2059,7 @@ class TestIvfIndexCompaction:
             for p in _pl.Path(_corpus_dir(d)).glob("cluster_id=*/batch_id=*")
         }
         assert gens == {"batch_id=2"}
-        assert _marker_ids(d) == []
+        assert marker_ids(d) == []
         # the cell-routed merge writes one file per compacted cell
         cells = list(_pl.Path(_corpus_dir(d)).glob("cluster_id=*/batch_id=2"))
         assert cells and all(len(list(c.glob("*.parquet"))) == 1 for c in cells)
@@ -2272,7 +2188,7 @@ class TestIvfCellCompaction:
         import pathlib as _pl
 
         from scala_etl_test_spark.streaming import compact_ivf_cells
-        from scala_etl_test_spark.streaming.ann import _marker_ids
+        from scala_etl_test_spark.streaming.compaction import marker_ids
 
         d, emb, _ = index
         before_probe = self._probe_all(spark, d, emb)
@@ -2292,7 +2208,7 @@ class TestIvfCellCompaction:
             if c.name != "cluster_id=2"
         }
         assert untouched_after == untouched_before  # byte-for-byte file sets
-        assert _marker_ids(d) == [-1, 1, 2]  # markers untouched
+        assert marker_ids(d) == [-1, 1, 2]  # markers untouched
         assert self._probe_all(spark, d, emb) == before_probe
 
     def test_replay_and_append_after_cell_compaction(self, spark, index):
