@@ -54,6 +54,18 @@ def test_write_table_passthrough_roundtrip(spark, sf_dir, tmp_path):
     assert spark.read.json(out).count() == 2 * nation.count()
 
 
+def test_zorder_key_interleaves_and_clusters(spark):
+    from scala_etl_test_spark.operators.layout import z_value
+
+    df = spark.createDataFrame([(x, y) for x in range(8) for y in range(8)], "x int, y int")
+    rows = df.select("x", "y", z_value([F.col("x"), F.col("y")], bits=3).alias("z")).collect()
+    z = {(r["x"], r["y"]): r["z"] for r in rows}
+    # known Morton values: (0,0)=0 (1,0)=1 (0,1)=2 (1,1)=3 (2,2)=12 (7,7)=63
+    assert z[(0, 0)] == 0 and z[(1, 0)] == 1 and z[(0, 1)] == 2
+    assert z[(1, 1)] == 3 and z[(2, 2)] == 12 and z[(7, 7)] == 63
+    assert len(set(z.values())) == 64  # bijective on the grid
+
+
 def test_zorder_sorted_write_prunes_both_dims(spark, tmp_path):
     """Sorting by the z-key bounds BOTH dimensions per file; a plain x-sort
     leaves y unconstrained (full range in every file)."""
